@@ -7556,21 +7556,10 @@ def q_streaming_flagship_golden(spark, sf):
 
     for t, (_, seed, _inc) in seeds.items():
         write(t, "seed.jsonl", seed)
-    # State-store width 2 (round 12): the partition count fixed at a
-    # StreamingQuery's first start is the state-store INSTANCE count and
-    # should track state SIZE (the _stream_partitions contract) — this
-    # pipeline's state is ≤ 22 keys BY DESIGN (the reference's golden
-    # fixture), so even the generic availableNow width of 8 pays 4x the
-    # per-instance commit/trigger cost for empty stores.  Interleaved
-    # width sweep (3 rounds, min): 2 → 4.99 s, 4 → 5.31 s, 8 → 6.76 s.
-    # A production deployment of the same pipeline sizes this from its
-    # expected key cardinality; both rounds here share one fresh
-    # checkpoint, so the width is start-consistent.
-    with _stream_partitions(spark, n=2):
-        run_flagship_stream(spark, src, work)  # round 1: the 5 seed docs
-        for t, (_, _seed, inc) in seeds.items():
-            write(t, "inc.jsonl", inc)
-        out = run_flagship_stream(spark, src, work)  # round 2: +1 doc
+    run_flagship_stream(spark, src, work)  # round 1: the 5 seed docs
+    for t, (_, _seed, inc) in seeds.items():
+        write(t, "inc.jsonl", inc)
+    out = run_flagship_stream(spark, src, work)  # round 2: +1 doc
     return out.select(
         "order_id", "shipment_id", "customer_id", "customer_name",
         F.col("customer_age").cast("int").alias("customer_age"),

@@ -9,6 +9,10 @@ appears (the reference's live-update demo, README.md:654-679)."""
 import json
 import os
 
+from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.session import (
+    input_width,
+    start_confs,
+)
 from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.pipeline import (
     run_flagship_stream,
 )
@@ -46,9 +50,26 @@ def _collect_golden(df):
     }
 
 
+_SHUFFLE = "spark.sql.shuffle.partitions"
+_CALLER_CONFS = (_SHUFFLE, "spark.sql.streaming.noDataMicroBatches.enabled")
+
+
+def _caller_confs(spark) -> dict:
+    confs = spark.conf.getAll
+    return {k: confs.get(k) for k in _CALLER_CONFS}
+
+
+def _checkpoint_width(work: str, query: str) -> int:
+    """The shuffle-partition count a query's checkpoint fixed at its
+    first batch (offset log: a version line, then the batch metadata)."""
+    with open(os.path.join(work, "checkpoints", query, "offsets", "0")) as fh:
+        return int(json.loads(fh.readlines()[1])["conf"][_SHUFFLE])
+
+
 def test_streaming_golden_incremental(spark, tmp_path):
     src = str(tmp_path / "src")
     work = str(tmp_path / "work")
+    caller = _caller_confs(spark)
 
     # round 1: seed files only
     _write_jsonl(f"{src}/customers/seed.jsonl", CUSTOMERS_SEED, CUSTOMERS_COLS)
@@ -57,14 +78,71 @@ def test_streaming_golden_incremental(spark, tmp_path):
     out1 = run_flagship_stream(spark, src, work)
     assert sorted(out1.columns) >= sorted(set(GOLDEN_COLS) - {"customer_name"}) or True
     assert _collect_golden(out1) == GOLDEN_SEED
+    assert _caller_confs(spark) == caller
+    # a few hundred bytes of input -> one state-store partition per
+    # query, whatever the caller's own shuffle width
+    assert _checkpoint_width(work, "customers") == 1
+    assert _checkpoint_width(work, "shipped") == 1
 
     # round 2: the D6 increment arrives; same checkpoints -> only the new
-    # files are processed, and the state tables revise incrementally
+    # files are processed, and the state tables revise incrementally.
+    # The caller's own width changes in between; the pipeline keeps 1.
     _write_jsonl(f"{src}/customers/inc.jsonl", CUSTOMERS_INCREMENT, CUSTOMERS_COLS)
     _write_jsonl(f"{src}/orders/inc.jsonl", ORDERS_INCREMENT, ORDERS_COLS)
     _write_jsonl(f"{src}/shipments/inc.jsonl", SHIPMENTS_INCREMENT, SHIPMENTS_COLS)
-    out2 = run_flagship_stream(spark, src, work)
+    spark.conf.set(_SHUFFLE, "3")
+    try:
+        changed = _caller_confs(spark)
+        out2 = run_flagship_stream(spark, src, work)
+        assert _caller_confs(spark) == changed
+    finally:
+        spark.conf.set(_SHUFFLE, caller[_SHUFFLE])
     assert _collect_golden(out2) == GOLDEN_SEED | {GOLDEN_INCREMENT_ROW}
+    assert _checkpoint_width(work, "shipped") == 1
+    # the restarted round's foreachBatch merge ran at width 1 too: one
+    # output file, not one per caller shuffle partition
+    assert len(out2.inputFiles()) == 1
+
+
+def test_input_width_one_split_per_partition_capped_at_parallelism(spark):
+    cap = spark.sparkContext.defaultParallelism
+    with start_confs(spark, {"spark.sql.files.maxPartitionBytes": "1k"}):
+        assert input_width(spark, 0) == 1
+        assert input_width(spark, 300) == 1
+        assert input_width(spark, 1024) == 1
+        assert input_width(spark, 1025) == 2
+        assert input_width(spark, 1024 * cap) == cap
+        assert input_width(spark, 10**12) == cap
+
+
+def test_start_confs_scopes_per_thread_and_restores(spark):
+    """Threads scoping the same conf each see only their own value inside
+    the block, and the caller's value is back once all have left."""
+    import sys
+    import threading
+
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.getAll.get(key)
+    seen = []
+
+    def scope(i):
+        for _ in range(25):
+            with start_confs(spark, {key: f"{i + 1}k"}):
+                seen.append(spark.conf.get(key) == f"{i + 1}k")
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=scope, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert len(seen) == 8 * 25 and all(seen)
+    assert spark.conf.getAll.get(key) == before
 
 
 def test_streaming_restart_processes_nothing_new(spark, tmp_path):

@@ -19,10 +19,13 @@ Defaults are chosen for correctness-at-scale first:
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
-_LOCAL_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+_LOCAL_CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
 
 
 def build_session(
@@ -38,7 +41,7 @@ def build_session(
     """
     master = master or f"local[{_LOCAL_CPUS}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(_LOCAL_CPUS) if _LOCAL_CPUS.isdigit() else 32
+        shuffle_partitions = int(_LOCAL_CPUS) if _LOCAL_CPUS.isdigit() else os.cpu_count() or 1
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -71,3 +74,45 @@ def build_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def input_width(spark: SparkSession, input_bytes: int) -> int:
+    """Partition count for ``input_bytes`` of input: one partition per
+    ``spark.sql.files.maxPartitionBytes`` (the split size Spark's file
+    scans already use), at least 1 and at most
+    ``sparkContext.defaultParallelism``."""
+    split = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.files.maxPartitionBytes")
+    )
+    return max(1, min(-(-input_bytes // split), spark.sparkContext.defaultParallelism))
+
+
+_START_CONF_LOCK = threading.RLock()
+
+
+@contextmanager
+def start_confs(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set SQL ``confs`` on ``spark`` around one ``DataStreamWriter.start()``
+    call and restore them when the block exits.
+
+    ``start()`` clones the session's conf into the new query, so a conf
+    set here reaches that query and nothing started after the block.  A
+    conf the caller had not set is unset again rather than pinned to its
+    default.  The lock keeps the set/restore pairs of two threads from
+    interleaving (which could leave one thread's value behind) and lets
+    one thread nest blocks.  Code that reads the session conf outside
+    this manager still sees the scoped values while the block runs, so
+    keep the block to the ``start()`` call.
+    """
+    with _START_CONF_LOCK:
+        before = spark.conf.getAll
+        for key, value in confs.items():
+            spark.conf.set(key, value)
+        try:
+            yield
+        finally:
+            for key in confs:
+                if key in before:
+                    spark.conf.set(key, before[key])
+                else:
+                    spark.conf.unset(key)

@@ -29,10 +29,11 @@ demonstrates by inserting customer 9 / order 31 / shipment 97 live
 from __future__ import annotations
 
 import os
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
@@ -43,6 +44,7 @@ from pyspark.sql.types import (
 )
 
 from ..operators.joins import enrich
+from ..session import input_width, start_confs
 from .sources import file_stream
 from .upsert import keyed_upsert_sink, read_state
 
@@ -204,6 +206,38 @@ SHIPMENTS_SCHEMA = StructType(
 )
 
 
+def _dir_bytes(*dirs: str) -> int:
+    return sum(
+        os.path.getsize(os.path.join(root, f))
+        for d in dirs
+        for root, _, files in os.walk(d)
+        for f in files
+    )
+
+
+def _start(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    src_dirs: Sequence[str],
+    confs: Mapping[str, str] | None = None,
+) -> StreamingQuery:
+    """Start ``writer`` with ``confs``, and ``spark.sql.shuffle.partitions``
+    = ``input_width`` of the bytes under ``src_dirs``, scoped to the
+    ``start()`` call.
+
+    The width is set on every start: a fresh checkpoint records it as
+    the query's state-store partition count, and on a restart Spark
+    takes that count from the checkpoint for the stateful operators only
+    — the query's other shuffles, its ``foreachBatch`` merges included,
+    run at the session's ``shuffle.partitions``."""
+    confs = {
+        **(confs or {}),
+        "spark.sql.shuffle.partitions": str(input_width(spark, _dir_bytes(*src_dirs))),
+    }
+    with start_confs(spark, confs):
+        return writer.start()
+
+
 def run_flagship_stream(spark: SparkSession, src_dir: str, work_dir: str) -> DataFrame:
     """Run one incremental round of the full streaming pipeline over the
     fixture directories ``src_dir/{customers,orders,shipments}`` and
@@ -214,11 +248,23 @@ def run_flagship_stream(spark: SparkSession, src_dir: str, work_dir: str) -> Dat
     calling once on the seed data and again after dropping in the D6
     increment files reproduces the reference's live-update demo
     (README.md:654-679: 5 docs, then 6).
+
+    State width: each query runs at ``session.input_width`` of the bytes
+    under its source directories, not at the caller's
+    ``spark.sql.shuffle.partitions``.  The width a query's checkpoint is
+    created with is its state-store partition count for good: later
+    rounds keep it whatever their input, so a pipeline that begins small
+    stays narrow (start from a fresh ``work_dir`` to re-size it).  The
+    ``foreachBatch`` merges are re-sized at every round.  The caller's
+    session confs are left as they were found.
     """
     ckpt = os.path.join(work_dir, "checkpoints")
     state = os.path.join(work_dir, "state")
     customers_state = os.path.join(state, "customers_by_key")
     shipped_state = os.path.join(state, "shipped_orders")
+    customers_dir = os.path.join(src_dir, "customers")
+    orders_dir = os.path.join(src_dir, "orders")
+    shipments_dir = os.path.join(src_dir, "shipments")
 
     # Query 1 is no-data-batch-neutral (round 11): a watermark-free
     # update-mode aggregation — with no watermark there is nothing for
@@ -232,36 +278,30 @@ def run_flagship_stream(spark: SparkSession, src_dir: str, work_dir: str) -> Dat
     # admitting late rows canonical semantics would drop.  (The
     # one-shot q_streaming_interval_join entry still skips it safely —
     # single availableNow run, no cross-round state.)
-    _ndkey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    _nd_old = spark.conf.get(_ndkey, "true")
 
     # --- query 1: customers CDC -> streaming latest_by_offset table (A2/A3)
-    customers = file_stream(
-        spark, os.path.join(src_dir, "customers"), CUSTOMERS_SCHEMA, fmt="json"
-    )
+    customers = file_stream(spark, customers_dir, CUSTOMERS_SCHEMA, fmt="json")
     compacted = streaming_latest_by_offset(
         customers, keys=["id"], offset_col="_offset",
         value_cols=["name", "age", "__deleted"],
     )
-    spark.conf.set(_ndkey, "false")
-    try:
-        q1 = (
-            compacted.writeStream.outputMode("update")
-            .foreachBatch(
-                keyed_upsert_sink(customers_state, keys=["id"], offset_col="_offset")
-            )
-            .option("checkpointLocation", os.path.join(ckpt, "customers"))
-            .trigger(availableNow=True)
-            .start()
+    q1 = _start(
+        spark,
+        compacted.writeStream.outputMode("update")
+        .foreachBatch(
+            keyed_upsert_sink(customers_state, keys=["id"], offset_col="_offset")
         )
-        q1.awaitTermination()
-    finally:
-        spark.conf.set(_ndkey, _nd_old)
+        .option("checkpointLocation", os.path.join(ckpt, "customers"))
+        .trigger(availableNow=True),
+        [customers_dir],
+        {"spark.sql.streaming.noDataMicroBatches.enabled": "false"},
+    )
+    q1.awaitTermination()
 
     # --- query 2: orders x shipments watermarked interval join (J2) with
     # foreachBatch temporal enrichment (J1) + keyed upsert (S9/E2)
     orders = (
-        file_stream(spark, os.path.join(src_dir, "orders"), ORDERS_SCHEMA, fmt="json")
+        file_stream(spark, orders_dir, ORDERS_SCHEMA, fmt="json")
         .withColumn("ts", F.to_timestamp("ts", TS_FMT))  # S6 event-time parse
         .select(
             F.col("customer_id"),
@@ -272,9 +312,7 @@ def run_flagship_stream(spark: SparkSession, src_dir: str, work_dir: str) -> Dat
         )
     )
     shipments = (
-        file_stream(
-            spark, os.path.join(src_dir, "shipments"), SHIPMENTS_SCHEMA, fmt="json"
-        )
+        file_stream(spark, shipments_dir, SHIPMENTS_SCHEMA, fmt="json")
         .withColumn("ts", F.to_timestamp("ts", TS_FMT))
         .select(
             F.col("order_id").alias("s_order_id"),
@@ -309,7 +347,8 @@ def run_flagship_stream(spark: SparkSession, src_dir: str, work_dir: str) -> Dat
             batch_df, dim, on=F.col("customer_id") == F.col("id"), how="left"
         ).drop("id")
 
-    q2 = (
+    q2 = _start(
+        spark,
         shipped.writeStream.outputMode("append")
         .foreachBatch(
             keyed_upsert_sink(
@@ -320,8 +359,8 @@ def run_flagship_stream(spark: SparkSession, src_dir: str, work_dir: str) -> Dat
             )
         )
         .option("checkpointLocation", os.path.join(ckpt, "shipped"))
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
+        [orders_dir, shipments_dir],
     )
     q2.awaitTermination()
 
