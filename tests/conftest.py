@@ -62,3 +62,20 @@ def _clear_spark_cache(request):
     yield
     if "spark" in request.fixturenames:
         request.getfixturevalue("spark").catalog.clearCache()
+
+
+@pytest.fixture(autouse=True)
+def _no_active_streams(request):
+    """Fail a test that leaves a StreamingQuery running on the shared
+    session: a leaked query keeps reading its source dirs and writing
+    its sinks under later tests.  The leaked queries are stopped first,
+    so the failure stays with the test that leaked them."""
+    yield
+    if "spark" not in request.fixturenames:
+        return
+    leaked = request.getfixturevalue("spark").streams.active
+    for q in leaked:
+        q.stop()
+    assert not leaked, f"test left {len(leaked)} streaming queries active: " + ", ".join(
+        str(q.name or q.id) for q in leaked
+    )

@@ -9,9 +9,16 @@ appears (the reference's live-update demo, README.md:654-679)."""
 import json
 import os
 
+import pytest
+from pyspark.errors import StreamingQueryException
+
 from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.session import (
     input_width,
     start_confs,
+)
+from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming import (
+    pipeline,
+    upsert,
 )
 from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.pipeline import (
     run_flagship_stream,
@@ -143,6 +150,171 @@ def test_start_confs_scopes_per_thread_and_restores(spark):
     assert not any(t.is_alive() for t in threads)
     assert len(seen) == 8 * 25 and all(seen)
     assert spark.conf.getAll.get(key) == before
+
+
+def _drop(src: str, name: str, customers, orders, shipments) -> None:
+    """Write one round's files into the three source dirs."""
+    _write_jsonl(f"{src}/customers/{name}.jsonl", customers, CUSTOMERS_COLS)
+    _write_jsonl(f"{src}/orders/{name}.jsonl", orders, ORDERS_COLS)
+    _write_jsonl(f"{src}/shipments/{name}.jsonl", shipments, SHIPMENTS_COLS)
+
+
+def _golden_rounds(spark, src: str, work: str) -> None:
+    """The seed round, then the D6 increment round."""
+    _drop(src, "seed", CUSTOMERS_SEED, ORDERS_SEED, SHIPMENTS_SEED)
+    assert _collect_golden(run_flagship_stream(spark, src, work)) == GOLDEN_SEED
+    _drop(src, "inc", CUSTOMERS_INCREMENT, ORDERS_INCREMENT, SHIPMENTS_INCREMENT)
+    assert _collect_golden(run_flagship_stream(spark, src, work)) == (
+        GOLDEN_SEED | {GOLDEN_INCREMENT_ROW}
+    )
+
+
+def _drop_rename_round(src: str) -> None:
+    """Existing customer 5 is renamed (and ages) in the same round as a
+    new order and shipment of theirs arrive."""
+    _drop(
+        src, "r3",
+        [("5", "frederick", 35, False, 4)],
+        [("5", "33", 42.0, "usd", "2020-04-05T10:00:00", 6)],
+        [("33", "99", "ohio", "2020-04-06T09:00:00", 6)],
+    )
+
+
+_RENAME_ROUND_GOLDEN = GOLDEN_SEED | {
+    GOLDEN_INCREMENT_ROW,
+    ("33", "99", "5", "frederick", 35, "ohio", 42.0, "usd"),
+}
+
+
+def test_streaming_enrichment_waits_for_same_round_customer_update(spark, tmp_path):
+    """The two queries overlap, but a round's enrichment reads the
+    customers table only after that round's changes are in it: the new
+    order carries the customer's new name, while their earlier orders
+    keep the name they were enriched with (J1 as of processing time)."""
+    src = str(tmp_path / "src")
+    work = str(tmp_path / "work")
+    _golden_rounds(spark, src, work)
+
+    _drop_rename_round(src)
+    caller = _caller_confs(spark)
+    spark.conf.set(_SHUFFLE, "3")
+    try:
+        out = run_flagship_stream(spark, src, work)
+    finally:
+        spark.conf.set(_SHUFFLE, caller[_SHUFFLE])
+    assert _collect_golden(out) == _RENAME_ROUND_GOLDEN
+    # q2's width, scoped around its start() while q1 ran, did not reach
+    # q1's merge: the customers table is still written at width 1
+    customers = upsert.read_state(spark, os.path.join(work, "state", "customers_by_key"))
+    assert len(customers.inputFiles()) == 1
+    assert spark.streams.active == []
+
+
+def test_streaming_failed_customers_round_commits_nothing_and_resumes(
+    spark, tmp_path, monkeypatch
+):
+    """If q1 fails, q2's enrichment raises rather than read a stale
+    customers table: the call raises q1's error, commits no
+    shipped_orders version and leaves no query active, and re-running
+    the round without the fault gives the expected rows (exactly-once
+    resume).  The same holds when q2's start() itself raises."""
+    src = str(tmp_path / "src")
+    work = str(tmp_path / "work")
+    shipped = os.path.join(work, "state", "shipped_orders")
+    _golden_rounds(spark, src, work)
+    version = upsert._state_version(shipped)
+
+    real_sink = pipeline.keyed_upsert_sink
+
+    def faulty_sink(state_dir, *args, **kwargs):
+        sink = real_sink(state_dir, *args, **kwargs)
+        if not state_dir.endswith("customers_by_key"):
+            return sink
+
+        def _sink(batch_df, batch_id):
+            raise RuntimeError("injected customers sink fault")
+
+        return _sink
+
+    monkeypatch.setattr(pipeline, "keyed_upsert_sink", faulty_sink)
+    _drop_rename_round(src)
+    with pytest.raises(StreamingQueryException, match="injected customers sink fault"):
+        run_flagship_stream(spark, src, work)
+    assert upsert._state_version(shipped) == version
+    assert spark.streams.active == []
+    monkeypatch.undo()
+
+    # q2's start() raises: q1 is not left running, nothing is committed
+    real_start = pipeline._start
+    starts = []
+
+    def failing_second_start(*args, **kwargs):
+        starts.append(1)
+        if len(starts) == 2:
+            raise RuntimeError("injected start fault")
+        return real_start(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "_start", failing_second_start)
+    with pytest.raises(RuntimeError, match="injected start fault"):
+        run_flagship_stream(spark, src, work)
+    assert upsert._state_version(shipped) == version
+    assert spark.streams.active == []
+    monkeypatch.undo()
+
+    assert _collect_golden(run_flagship_stream(spark, src, work)) == _RENAME_ROUND_GOLDEN
+    assert upsert._state_version(shipped) == version + 1
+    assert spark.streams.active == []
+
+
+def test_schema_memo_safe_under_concurrent_commits(tmp_path, monkeypatch):
+    """Sinks of one pipeline commit from concurrent foreachBatch threads:
+    their prune-and-insert of the schema memo must not interleave (an
+    unguarded scan raises "dictionary changed size during iteration")."""
+    import sys
+    import threading
+
+    class _Frame:
+        """Just enough of a DataFrame for write_version."""
+
+        schema = "schema"
+
+        class write:  # noqa: N801
+            @staticmethod
+            def mode(_):
+                return _Frame.write
+
+            @staticmethod
+            def parquet(path):
+                os.makedirs(path)
+
+    # unrelated entries make each scan long enough for a thread switch
+    memo = {f"/elsewhere/{i}/v=0": "other" for i in range(2000)}
+    monkeypatch.setattr(upsert, "_SCHEMA_MEMO", memo)
+    errors = []
+
+    def commit(i):
+        state_dir = str(tmp_path / f"state{i}")
+        try:
+            for _ in range(40):
+                upsert.write_version(_Frame, state_dir)
+        except Exception as exc:  # noqa: BLE001 - reported below
+            errors.append(exc)
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=commit, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    for i in range(8):
+        mine = [k for k in memo if k.startswith(str(tmp_path / f"state{i}"))]
+        assert mine == [str(tmp_path / f"state{i}" / "v=39")]
 
 
 def test_streaming_restart_processes_nothing_new(spark, tmp_path):

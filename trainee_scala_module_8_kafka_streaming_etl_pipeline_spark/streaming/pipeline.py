@@ -18,6 +18,14 @@ cannot express that, so enrichment runs inside ``foreachBatch`` against
 the state table maintained by the compaction query — the two-cooperating-
 queries design (SURVEY §7 phase 3 option (a)).
 
+The two queries run concurrently, each with its own checkpoint, WAL and
+trigger loop.  Their one ordering constraint is a single barrier: a
+round's enrichment reads the customers table only after that round's
+compaction query has finished, so q2's start, offset listing, planning
+and join overlap q1.  If q1 fails, the enrichment raises instead of
+reading a stale table, so no ``shipped_orders`` version is committed and
+the next round replays the batch.
+
 Each query is a real ``StreamingQuery`` with a checkpoint: offsets are
 tracked per source file (S7 ``earliest`` on first start, resume-exactly-
 after on restart), and re-running with ``availableNow`` picks up only
@@ -29,8 +37,10 @@ demonstrates by inserting customer 9 / order 31 / shipment 97 live
 from __future__ import annotations
 
 import os
+import threading
 from collections.abc import Mapping, Sequence
 
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
@@ -238,6 +248,74 @@ def _start(
         return writer.start()
 
 
+def _shipped_stream(spark: SparkSession, orders_dir: str, shipments_dir: str) -> DataFrame:
+    """Orders x shipments watermarked interval join (J2), the input of
+    the flagship's ``shipped_orders`` query."""
+    orders = (
+        file_stream(spark, orders_dir, ORDERS_SCHEMA, fmt="json")
+        .withColumn("ts", F.to_timestamp("ts", TS_FMT))  # S6 event-time parse
+        .select(
+            F.col("customer_id"),
+            F.col("order_id"),
+            F.col("price"),
+            F.col("currency"),
+            F.col("ts").alias("order_ts"),
+        )
+    )
+    shipments = (
+        file_stream(spark, shipments_dir, SHIPMENTS_SCHEMA, fmt="json")
+        .withColumn("ts", F.to_timestamp("ts", TS_FMT))
+        .select(
+            F.col("order_id").alias("s_order_id"),
+            F.col("shipment_id"),
+            F.col("origin"),
+            F.col("ts").alias("ship_ts"),
+            F.col("_offset"),
+        )
+    )
+    return watermarked_interval_join(
+        orders,
+        shipments,
+        keys=[("order_id", "s_order_id")],
+        left_ts="order_ts",
+        right_ts="ship_ts",
+    ).select(
+        "order_id", "shipment_id", "customer_id", "origin", "price", "currency",
+        "_offset",
+    )
+
+
+class _Outcome:
+    """How one query's round ended, handed from the thread that awaits
+    the query to the ``foreachBatch`` threads that must not run ahead of
+    it.  Settled by one thread; only the first ``settle`` counts."""
+
+    def __init__(self, what: str):
+        self._what = what
+        self._done = threading.Event()
+        self.error: BaseException | None = None
+
+    def settle(self, error: BaseException | None = None) -> None:
+        if not self._done.is_set():
+            self.error = error
+            self._done.set()
+
+    def wait(self) -> None:
+        """Block until settled; raise if the query did not complete."""
+        self._done.wait()
+        if self.error is not None:
+            raise RuntimeError(f"{self._what} did not complete: {self.error}") from self.error
+
+
+def _finish(query: StreamingQuery) -> StreamingQueryException | None:
+    """Wait for ``query`` to end and return the error it ended with."""
+    try:
+        query.awaitTermination()
+    except StreamingQueryException as exc:
+        return exc
+    return None
+
+
 def run_flagship_stream(spark: SparkSession, src_dir: str, work_dir: str) -> DataFrame:
     """Run one incremental round of the full streaming pipeline over the
     fixture directories ``src_dir/{customers,orders,shipments}`` and
@@ -248,6 +326,18 @@ def run_flagship_stream(spark: SparkSession, src_dir: str, work_dir: str) -> Dat
     calling once on the seed data and again after dropping in the D6
     increment files reproduces the reference's live-update demo
     (README.md:654-679: 5 docs, then 6).
+
+    Overlap: q1 (``customers_by_key``) and q2 (``shipped_orders``) are
+    both started before either is awaited.  The only barrier is inside
+    q2's enrichment, just before it reads the customers table: it waits
+    until this call has seen q1 end, so q2's start, offset listing, WAL,
+    planning and interval join run while q1 is still running, and the
+    enrichment still sees this round's customer changes.  Failure rule:
+    if q1 fails (or the round is aborted before q1 ends), the enrichment
+    raises instead of reading a stale table, so q2 commits no
+    ``shipped_orders`` version for that batch and the next call replays
+    it.  The call then waits for q2, raises q1's error, and leaves no
+    query of its own active.
 
     State width: each query runs at ``session.input_width`` of the bytes
     under its source directories, not at the caller's
@@ -285,55 +375,11 @@ def run_flagship_stream(spark: SparkSession, src_dir: str, work_dir: str) -> Dat
         customers, keys=["id"], offset_col="_offset",
         value_cols=["name", "age", "__deleted"],
     )
-    q1 = _start(
-        spark,
-        compacted.writeStream.outputMode("update")
-        .foreachBatch(
-            keyed_upsert_sink(customers_state, keys=["id"], offset_col="_offset")
-        )
-        .option("checkpointLocation", os.path.join(ckpt, "customers"))
-        .trigger(availableNow=True),
-        [customers_dir],
-        {"spark.sql.streaming.noDataMicroBatches.enabled": "false"},
-    )
-    q1.awaitTermination()
-
-    # --- query 2: orders x shipments watermarked interval join (J2) with
-    # foreachBatch temporal enrichment (J1) + keyed upsert (S9/E2)
-    orders = (
-        file_stream(spark, orders_dir, ORDERS_SCHEMA, fmt="json")
-        .withColumn("ts", F.to_timestamp("ts", TS_FMT))  # S6 event-time parse
-        .select(
-            F.col("customer_id"),
-            F.col("order_id"),
-            F.col("price"),
-            F.col("currency"),
-            F.col("ts").alias("order_ts"),
-        )
-    )
-    shipments = (
-        file_stream(spark, shipments_dir, SHIPMENTS_SCHEMA, fmt="json")
-        .withColumn("ts", F.to_timestamp("ts", TS_FMT))
-        .select(
-            F.col("order_id").alias("s_order_id"),
-            F.col("shipment_id"),
-            F.col("origin"),
-            F.col("ts").alias("ship_ts"),
-            F.col("_offset"),
-        )
-    )
-    shipped = watermarked_interval_join(
-        orders,
-        shipments,
-        keys=[("order_id", "s_order_id")],
-        left_ts="order_ts",
-        right_ts="ship_ts",
-    ).select(
-        "order_id", "shipment_id", "customer_id", "origin", "price", "currency",
-        "_offset",
-    )
+    customers_done = _Outcome("customers_by_key query")
 
     def _enrich_with_customer_state(batch_df: DataFrame) -> DataFrame:
+        # the barrier: this round's customer changes are in the table
+        customers_done.wait()
         cust = read_state(batch_df.sparkSession, customers_state)
         if cust is None:
             return batch_df.withColumn("customer_name", F.lit(None).cast("string")) \
@@ -347,22 +393,52 @@ def run_flagship_stream(spark: SparkSession, src_dir: str, work_dir: str) -> Dat
             batch_df, dim, on=F.col("customer_id") == F.col("id"), how="left"
         ).drop("id")
 
-    q2 = _start(
+    q1 = _start(
         spark,
-        shipped.writeStream.outputMode("append")
+        compacted.writeStream.outputMode("update")
         .foreachBatch(
-            keyed_upsert_sink(
-                shipped_state,
-                keys=["order_id"],
-                offset_col="_offset",
-                transform=_enrich_with_customer_state,
-            )
+            keyed_upsert_sink(customers_state, keys=["id"], offset_col="_offset")
         )
-        .option("checkpointLocation", os.path.join(ckpt, "shipped"))
+        .option("checkpointLocation", os.path.join(ckpt, "customers"))
         .trigger(availableNow=True),
-        [orders_dir, shipments_dir],
+        [customers_dir],
+        {"spark.sql.streaming.noDataMicroBatches.enabled": "false"},
     )
-    q2.awaitTermination()
+    queries = [q1]
+    try:
+        # --- query 2, started without waiting for q1: orders x shipments
+        # watermarked interval join (J2) with foreachBatch temporal
+        # enrichment (J1) + keyed upsert (S9/E2)
+        q2 = _start(
+            spark,
+            _shipped_stream(spark, orders_dir, shipments_dir).writeStream
+            .outputMode("append")
+            .foreachBatch(
+                keyed_upsert_sink(
+                    shipped_state,
+                    keys=["order_id"],
+                    offset_col="_offset",
+                    transform=_enrich_with_customer_state,
+                )
+            )
+            .option("checkpointLocation", os.path.join(ckpt, "shipped"))
+            .trigger(availableNow=True),
+            [orders_dir, shipments_dir],
+        )
+        queries.append(q2)
+        customers_done.settle(_finish(q1))
+        q2_error = _finish(q2)
+    finally:
+        # aborted before q1's outcome was known (q2's start raised, or the
+        # caller was interrupted): no enrichment may read the table
+        customers_done.settle(RuntimeError("the round was aborted before it ended"))
+        for q in queries:
+            if q.isActive:
+                q.stop()
+    if customers_done.error is not None:
+        raise customers_done.error
+    if q2_error is not None:
+        raise q2_error
 
     out = read_state(spark, shipped_state)
     assert out is not None

@@ -27,6 +27,7 @@ key, never the full history.
 from __future__ import annotations
 
 import os
+import threading
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -42,8 +43,11 @@ _POINTER = "_LATEST"
 # merge reads 1-2 state tables, round 11).  Keyed by the immutable
 # version dir (never rewritten in place; vacuumed dirs simply age out of
 # use), with inference as the fallback for readers in a fresh process
-# (crash replay, external readers).
+# (crash replay, external readers).  The sinks of one pipeline commit
+# from concurrent foreachBatch threads, so the prune-and-insert holds a
+# lock (a lone ``get`` is atomic).
 _SCHEMA_MEMO: dict[str, object] = {}
+_SCHEMA_MEMO_LOCK = threading.Lock()
 
 
 def _state_version(state_dir: str) -> int | None:
@@ -170,9 +174,11 @@ def write_version(
     # keep only the newest version's schema per state dir — a long-lived
     # sink must not grow the memo by one entry per batch
     prefix = os.path.join(state_dir, "v=")
-    for k in [k for k in _SCHEMA_MEMO if k.startswith(prefix)]:
-        del _SCHEMA_MEMO[k]
-    _SCHEMA_MEMO[vdir] = df.schema
+    schema = df.schema
+    with _SCHEMA_MEMO_LOCK:
+        for k in [k for k in _SCHEMA_MEMO if k.startswith(prefix)]:
+            del _SCHEMA_MEMO[k]
+        _SCHEMA_MEMO[vdir] = schema
     tmp = os.path.join(state_dir, f"{_POINTER}.tmp")
     with open(tmp, "w") as fh:
         fh.write(str(next_v))
