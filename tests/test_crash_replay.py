@@ -1,14 +1,16 @@
-"""Crash-replay / exactly-once properties for every version-per-batch
-state sink (the `_commit` protocol in streaming/transitions.py).
+"""Crash-replay / exactly-once properties for every state sink that
+commits at its batch id (the batch-id version policy of
+streaming/upsert.py: ``write_version(df, dir, version=batch_id)`` with
+the prior from ``read_state(spark, dir, below=batch_id)``).
 
-The protocol's claim: each micro-batch commits as state version
+The policy's claim: each micro-batch commits as state version
 ``v=<batch_id>`` and a re-run reads the greatest version STRICTLY BELOW
 its own id — so a batch re-delivered after a crash (whether the crash
 hit before the pointer swap, leaving an orphan version directory, or
 after the swap but before the checkpoint commit, causing a full
 re-delivery) is a deterministic overwrite, never a double-count.
 
-These properties pin that claim for all eight sinks sharing `_commit`:
+These properties pin that claim for all thirteen additive-merge sinks:
 under hypothesis-generated batch splits and an injected failure at a
 hypothesis-chosen batch, the final state must equal the clean run's
 state exactly.  Two failure modes per example:
@@ -87,16 +89,27 @@ def _docs_df(spark, rs):
     )
 
 
+# 2024-01-02 00:00:00 UTC: splits _events_df's two days for the drift monitor
+_DRIFT_MID_US = 1_704_153_600_000_000
+
+
 def _sinks():
     from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming import (
+        bars,
         cohort,
         disorder,
+        drift,
         funnel,
         index,
         interarrival,
         mixture,
         scd2,
+        sinks,
+        sketches,
         transitions,
+    )
+    from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.upsert import (
+        read_state,
     )
 
     terms = ["w0", "w1", "w2"]
@@ -128,6 +141,33 @@ def _sinks():
             _docs_df,
             lambda b, d, i: index.merge_index_batch(b, d, terms, i),
             index.read_bm25_topk,
+        ),
+        "cms": (
+            _events_df,
+            lambda b, d, i: sketches.merge_cms_batch(b, d, "user_id", i),
+            read_state,
+        ),
+        "hist": (
+            _events_df,
+            lambda b, d, i: sketches.merge_hist_batch(b, d, "value", i, ["user_id"]),
+            read_state,
+        ),
+        "drift": (
+            _events_df,
+            lambda b, d, i: drift.merge_drift_batch(b, d, _DRIFT_MID_US, i),
+            drift.read_psi,
+        ),
+        "bars": (
+            _events_df,
+            lambda b, d, i: bars.merge_bars_batch(
+                b, d, ["user_id"], "ts", "value", "event_id", "hour", i
+            ),
+            lambda s, d: bars.read_bars(s, d, ["user_id"]),
+        ),
+        "topn": (
+            _events_df,
+            lambda b, d, i: sinks.topn_sink(d, "value", 5, ["event_id"])(b, i),
+            read_state,
         ),
     }
 
@@ -185,6 +225,11 @@ import pytest
         "ltv",
         "mixture",
         "bm25_index",
+        "cms",
+        "hist",
+        "drift",
+        "bars",
+        "topn",
     ],
 )
 @given(rs=_rows, cuts=_cuts, crash_frac=st.floats(0, 1), mode=_mode)

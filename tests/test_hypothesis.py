@@ -3496,11 +3496,11 @@ def test_streaming_cms_split_invariant(spark, keys, cuts):
     state = tempfile.mkdtemp(prefix="cmsprop_")
     try:
         bounds = sorted(c * len(keys) // 60 for c in cuts) + [len(keys)]
-        lo = 0
+        lo, batch_id = 0, 0
         for hi in bounds:
             if hi > lo:
-                merge_cms_batch(mkdf(keys[lo:hi]), state, "k")
-                lo = hi
+                merge_cms_batch(mkdf(keys[lo:hi]), state, "k", batch_id)
+                lo, batch_id = hi, batch_id + 1
         cand = mkdf(sorted(set(keys)))
         topk = 1000  # all candidates: compare full estimate vectors
         got = {

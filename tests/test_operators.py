@@ -199,6 +199,88 @@ def test_upsert_rerun_same_batch_is_idempotent(spark, tmp_path):
         assert {(r.id, r.v) for r in read_state(spark, state).collect()} == want
 
 
+# 2024-01-02 00:00:00 UTC: the drift monitor's period boundary
+_DRIFT_MID_US = 1_704_153_600_000_000
+
+
+def _additive_merge(sink):
+    """(batch_df, state_dir, batch_id) -> None for each additive-merge
+    sink (sum, count or top-n fold: none is idempotent)."""
+    from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming import (
+        bars,
+        drift,
+        sinks,
+        sketches,
+    )
+
+    return {
+        "cms": lambda b, d, i: sketches.merge_cms_batch(b, d, "user_id", i),
+        "hist": lambda b, d, i: sketches.merge_hist_batch(b, d, "value", i),
+        "drift": lambda b, d, i: drift.merge_drift_batch(b, d, _DRIFT_MID_US, i),
+        "bars": lambda b, d, i: bars.merge_bars_batch(
+            b, d, ["user_id"], "ts", "value", "event_id", "hour", i
+        ),
+        "topn": lambda b, d, i: sinks.topn_sink(d, "value", 5, ["event_id"])(b, i),
+    }[sink]
+
+
+@pytest.mark.parametrize("sink", ["cms", "hist", "drift", "bars", "topn"])
+def test_additive_sink_redelivered_batch_counts_once(spark, tmp_path, sink):
+    """A batch delivered again after its commit (a crash after the pointer
+    swap, before the checkpoint commit) must leave the state the clean
+    run leaves: an additive sink that folded the batch into its own
+    commit would count it twice."""
+    merge = _additive_merge(sink)
+    rows = [
+        (i % 3, f"2024-01-0{1 + i % 2} 1{i % 4}:00:00", i, float(i * 10))
+        for i in range(10)
+    ]
+    df = spark.createDataFrame(
+        rows, ["user_id", "ts_s", "event_id", "value"]
+    ).select(
+        "user_id",
+        F.to_timestamp("ts_s").alias("ts"),
+        "event_id",
+        "value",
+        F.when(F.col("user_id") == 0, "view").otherwise("click").alias("event_type"),
+    )
+    b0 = df.filter(F.col("event_id") < 5)
+    b1 = df.filter(F.col("event_id") >= 5)
+
+    def state_after(name, deliveries):
+        state = str(tmp_path / name)
+        for bid, batch in deliveries:
+            merge(batch, state, bid)
+        return sorted(tuple(r) for r in read_state(spark, state).collect())
+
+    clean = state_after("clean", [(0, b0), (1, b1)])
+    assert clean
+    assert state_after("redelivered", [(0, b0), (1, b1), (1, b1)]) == clean
+
+
+def test_state_table_format_lives_in_upsert_only():
+    """Only streaming/upsert.py knows the state table's on-disk format
+    (the ``_LATEST`` pointer file and the ``v=N`` version dirs); every
+    other module goes through read_state / write_version."""
+    import re
+
+    import trainee_scala_module_8_kafka_streaming_etl_pipeline_spark as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    format_use = re.compile(r"""_LATEST|["'/]v=|\b_state_version\b|\b_POINTER\b""")
+    offenders = []
+    for dirpath, _, files in os.walk(root):
+        for name in files:
+            path = os.path.join(dirpath, name)
+            if not name.endswith(".py") or path == os.path.join(root, "streaming", "upsert.py"):
+                continue
+            with open(path) as fh:
+                for n, line in enumerate(fh, 1):
+                    if format_use.search(line):
+                        offenders.append(f"{os.path.relpath(path, root)}:{n}: {line.strip()}")
+    assert offenders == []
+
+
 def test_upsert_schema_evolution_widen(spark, tmp_path):
     """CDC widen: a mid-stream ALTER TABLE ADD COLUMN grows the envelope.
     With allow_schema_evolution the merge unions by name — untouched
@@ -226,7 +308,7 @@ def test_upsert_schema_evolution_widen(spark, tmp_path):
     assert got == {"1": ("a", None), "2": ("b2", "emea"), "3": ("c", "apac")}
 
 
-def test_vacuum_keeps_reader_visible_version(spark, tmp_path):
+def test_vacuum_keeps_reader_visible_version(spark, tmp_path, monkeypatch):
     """A reader that resolved the pointer just before new commits +
     vacuum(keep=2) can still collect its DataFrame: retention never
     drops the newest `keep` versions, so a one-behind reader's files
@@ -236,10 +318,11 @@ def test_vacuum_keeps_reader_visible_version(spark, tmp_path):
     )
 
     state = str(tmp_path / "state")
-    upsert.write_version(spark.range(3), state, retain=None)  # v=0
-    upsert.write_version(spark.range(4), state, retain=None)  # v=1
+    monkeypatch.setattr(upsert, "_RETAIN", 100)  # commits vacuum nothing
+    upsert.write_version(spark.range(3), state)  # v=0
+    upsert.write_version(spark.range(4), state)  # v=1
     reader = read_state(spark, state)  # resolves pointer -> v=1
-    upsert.write_version(spark.range(5), state, retain=None)  # v=2 current
+    upsert.write_version(spark.range(5), state)  # v=2 current
     dropped = upsert.vacuum_versions(state, keep=2)
     assert dropped == [0]
     # in-flight reader on v=1 still works after vacuum
@@ -495,14 +578,15 @@ def test_cooccurrence_edges_distinct_and_ordered(spark):
     assert got == {(10, 20)}
 
 
-def test_vacuum_versions_keeps_pointer_and_newest(spark, tmp_path):
+def test_vacuum_versions_keeps_pointer_and_newest(spark, tmp_path, monkeypatch):
     from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming import (
         upsert,
     )
 
     state = str(tmp_path / "state")
+    monkeypatch.setattr(upsert, "_RETAIN", 100)  # commits vacuum nothing
     for i in range(5):
-        upsert.write_version(spark.range(i + 1), state, retain=None)
+        upsert.write_version(spark.range(i + 1), state)
     dropped = upsert.vacuum_versions(state, keep=2)
     assert dropped == [0, 1, 2]
     # current pointer still readable with full contents

@@ -229,8 +229,8 @@ def test_drift_state_batch_split_invariant(spark, tmp_path):
     b1 = df.filter(F.second("ts") % 2 == 0)
     b2 = df.filter(F.second("ts") % 2 == 1)
     state = str(tmp_path / "state")
-    merge_drift_batch(b1, state, mid.m)
-    merge_drift_batch(b2, state, mid.m)
+    merge_drift_batch(b1, state, mid.m, 0)
+    merge_drift_batch(b2, state, mid.m, 1)
     streamed = {r.event_type: r for r in read_psi(spark, state).collect()}
     batch = {r.event_type: r for r in profiling.psi_drift(df).collect()}
     for g in ("shift", "flat"):

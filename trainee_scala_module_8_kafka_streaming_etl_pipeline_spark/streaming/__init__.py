@@ -11,7 +11,8 @@ surface onto Structured Streaming:
                 plus the Kafka option surface (S5/S7).
   upsert.py   — the keyed-upsert sink (S9/E2): a versioned parquet state
                 table maintained by ``foreachBatch`` MERGE with delete
-                propagation, the ES-connector analogue.
+                propagation, the ES-connector analogue — and the one
+                state-table commit protocol every state sink shares.
   pipeline.py — the continuous queries themselves: streaming
                 ``latest_by_offset`` in update mode (A2/A3/E1), the
                 watermarked stream-stream interval join (J2), and the

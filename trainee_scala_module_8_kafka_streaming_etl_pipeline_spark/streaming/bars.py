@@ -10,11 +10,13 @@ close_off, n_ticks) and two partial bars combine as
     high/low = max/min,  n_ticks = sum
 
 min_by/max_by/min/max are associative+commutative and n_ticks' sum is
-batch-split invariant under the foreachBatch checkpoint, so ANY
-micro-batch partitioning of the stream folds to the same bars the
-batch aggregate computes — which is exactly what the shared DuckDB
-oracle checks. State is O(keys × buckets), independent of tick volume:
-the A3 materialized-table pattern applied to a time-series rollup.
+batch-split invariant, so ANY micro-batch partitioning of the stream
+folds to the same bars the batch aggregate computes — which is exactly
+what the shared DuckDB oracle checks.  The n_ticks sum is not
+idempotent, so the state commits at its micro-batch id
+(streaming/upsert.py).  State is O(keys × buckets), independent of
+tick volume: the A3 materialized-table pattern applied to a
+time-series rollup.
 """
 
 from __future__ import annotations
@@ -70,12 +72,12 @@ def merge_bars_batch(
     value_col: str,
     offset_col: str,
     bucket: str,
-    retain: int | None = 2,
+    batch_id: int,
 ) -> None:
     part = _bar_state(batch_df, key_cols, ts_col, value_col, offset_col, bucket)
-    prior = read_state(batch_df.sparkSession, state_dir)
+    prior = read_state(batch_df.sparkSession, state_dir, below=batch_id)
     merged = part if prior is None else prior.unionByName(part)
-    write_version(_merge(merged, key_cols), state_dir, retain=retain)
+    write_version(_merge(merged, key_cols), state_dir, version=batch_id)
 
 
 def run_bars_stream(
@@ -91,7 +93,8 @@ def run_bars_stream(
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         merge_bars_batch(
-            batch_df, state_dir, key_cols, ts_col, value_col, offset_col, bucket
+            batch_df, state_dir, key_cols, ts_col, value_col, offset_col,
+            bucket, batch_id,
         )
 
     q = (

@@ -16,9 +16,9 @@ The matrix (cohort_week, week_offset, n_active, retention) is DERIVED
 at read time from the tiny state (O(users) + O(users x active-weeks)
 rows), so retroactive cohort moves need no retraction — the next read
 just sees the new assignment.  Idempotence means re-delivered batches
-are harmless, so the state commits with the plain versioned pointer
-swap (streaming/upsert.write_version), not the version-per-batch
-protocol the additive sinks need.
+are harmless, so the state commits at pointer + 1
+(streaming/upsert.write_version), not at the batch id the additive
+sinks need.
 
 Batch-split invariance holds under ANY arrival order — stronger than
 the id-ordered contract the dedup streams require — because both
@@ -51,9 +51,7 @@ def _batch_state(batch_df: DataFrame) -> DataFrame:
     return first.unionByName(act)
 
 
-def merge_cohort_batch(
-    batch_df: DataFrame, state_dir: str, retain: int | None = 2
-) -> None:
+def merge_cohort_batch(batch_df: DataFrame, state_dir: str) -> None:
     """state' = idempotent merge(state, batch): per-user min for the
     'first' rows, distinct union for the 'act' rows."""
     bs = _batch_state(batch_df)
@@ -71,7 +69,7 @@ def merge_cohort_batch(
         .distinct()
         .select("user_id", "wk", F.lit("act").alias("kind"))
     )
-    write_version(first.unionByName(act), state_dir, retain=retain)
+    write_version(first.unionByName(act), state_dir)
 
 
 def run_cohort_stream(stream_df: DataFrame, state_dir: str) -> None:
@@ -92,11 +90,8 @@ def run_cohort_stream(stream_df: DataFrame, state_dir: str) -> None:
 # idempotent), while the user's cohort can still move retroactively.
 # Keying revenue by user/week (not by cohort) keeps the additive state
 # immune to cohort moves — the cohort join happens at read time — and
-# the additive half forces the version-per-batch commit protocol
-# (streaming/transitions.py) instead of the plain pointer swap the
-# matrix state could use.
-
-from .transitions import _commit, _read_version, _versions  # noqa: E402
+# the additive half makes the state commit at its batch id instead of
+# the pointer + 1 the matrix state uses.
 
 _LTV_COLS = ["user_id", "wk", "kind", "rev_micro"]
 
@@ -150,12 +145,11 @@ def _ltv_merge(prior: DataFrame, bs: DataFrame) -> DataFrame:
 
 
 def merge_ltv_batch(batch_df: DataFrame, state_dir: str, batch_id: int) -> None:
-    spark = batch_df.sparkSession
-    prior_vs = [v for v in _versions(state_dir) if v < batch_id]
+    prior = read_state(batch_df.sparkSession, state_dir, below=batch_id)
     bs = _ltv_batch_state(batch_df)
-    if prior_vs:
-        bs = _ltv_merge(_read_version(spark, state_dir, max(prior_vs)), bs)
-    _commit(bs.select(*_LTV_COLS), state_dir, batch_id)
+    if prior is not None:
+        bs = _ltv_merge(prior, bs)
+    write_version(bs.select(*_LTV_COLS), state_dir, version=batch_id)
 
 
 def run_ltv_stream(stream_df: DataFrame, state_dir: str) -> None:
@@ -175,9 +169,7 @@ def read_ltv_curve(spark: SparkSession, state_dir: str) -> DataFrame:
     the batch ltv_cohort_curve operator."""
     from pyspark.sql import Window
 
-    from .upsert import _state_version
-
-    state = _read_version(spark, state_dir, _state_version(state_dir))
+    state = read_state(spark, state_dir)
     first = state.filter(F.col("kind") == "first").select(
         "user_id", F.col("wk").alias("cohort_week")
     )

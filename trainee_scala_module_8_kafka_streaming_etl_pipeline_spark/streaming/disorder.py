@@ -12,8 +12,8 @@ transition/interarrival states solve with segment endpoints).
 Valid under the arrival-order contract (micro-batches arrive in offset
 order — the audit is BY DEFINITION about arrival order, so this is not
 an extra assumption but the quantity being measured).  Tallies
-sum-merge, so the commit protocol is version-per-batch
-(streaming/transitions.py) for exactly-once counting.
+sum-merge, so the state commits at its batch id (streaming/upsert.py)
+for exactly-once counting.
 """
 
 from __future__ import annotations
@@ -23,8 +23,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .transitions import _commit, _read_version, _versions
-from .upsert import _state_version
+from .upsert import read_state, write_version
 
 
 def _batch_audit(batch_df: DataFrame, prior: DataFrame | None) -> DataFrame:
@@ -72,12 +71,8 @@ def _batch_audit(batch_df: DataFrame, prior: DataFrame | None) -> DataFrame:
 def merge_disorder_batch(
     batch_df: DataFrame, state_dir: str, batch_id: int
 ) -> None:
-    spark = batch_df.sparkSession
-    prior_vs = [v for v in _versions(state_dir) if v < batch_id]
-    prior = (
-        _read_version(spark, state_dir, max(prior_vs)) if prior_vs else None
-    )
-    _commit(_batch_audit(batch_df, prior), state_dir, batch_id)
+    prior = read_state(batch_df.sparkSession, state_dir, below=batch_id)
+    write_version(_batch_audit(batch_df, prior), state_dir, version=batch_id)
 
 
 def run_disorder_stream(stream_df: DataFrame, state_dir: str) -> None:
@@ -94,9 +89,7 @@ def run_disorder_stream(stream_df: DataFrame, state_dir: str) -> None:
 
 def read_disorder(spark: SparkSession, state_dir: str) -> DataFrame:
     """Current audit in the batch query's output shape."""
-    v = _state_version(state_dir)
-    st = _read_version(spark, state_dir, v)
-    return st.select(
+    return read_state(spark, state_dir).select(
         "event_type",
         F.col("n").alias("n_events"),
         "n_late",

@@ -8,11 +8,10 @@ bin) counts; PSI against the reference side is readable at any moment.
 
 The state is a plain additive histogram — sum-merge is associative and
 commutative, so the maintained counts are batch-split invariant and
-the batch PSI SQL over the same rows is the exact oracle (same
-contract as the CMS/histogram sketches in streaming/sketches.py; the
-exactly-once boundary comes from the checkpointed source offsets, not
-from the merge).  State size is O(groups x bins x 2) forever,
-regardless of stream volume.
+the batch PSI SQL over the same rows is the exact oracle.  Sum-merge is
+not idempotent, so, like the CMS/histogram sketches in
+streaming/sketches.py, the state commits at its micro-batch id.  State
+size is O(groups x bins x 2) forever, regardless of stream volume.
 """
 
 from __future__ import annotations
@@ -30,12 +29,12 @@ def merge_drift_batch(
     batch_df: DataFrame,
     state_dir: str,
     mid_us: int,
+    batch_id: int,
     group_col: str = "event_type",
     value_col: str = "value",
     ts_col: str = "ts",
     n_bins: int = 20,
     bin_width: float = 25.0,
-    retain: int | None = 2,
 ) -> None:
     """One histogram merge: state' = sum-merge(state, bins(batch))."""
     binned = assign_drift_bins(
@@ -44,10 +43,10 @@ def merge_drift_batch(
     counts = binned.groupBy("grp", "period", "bin").agg(
         F.count(F.lit(1)).alias("c")
     )
-    prior = read_state(batch_df.sparkSession, state_dir)
+    prior = read_state(batch_df.sparkSession, state_dir, below=batch_id)
     merged = counts if prior is None else prior.unionByName(counts)
     folded = merged.groupBy("grp", "period", "bin").agg(F.sum("c").alias("c"))
-    write_version(folded, state_dir, retain=retain)
+    write_version(folded, state_dir, version=batch_id)
 
 
 def run_drift_stream(
@@ -65,8 +64,8 @@ def run_drift_stream(
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         merge_drift_batch(
-            batch_df, state_dir, mid_us, group_col, value_col, ts_col,
-            n_bins, bin_width,
+            batch_df, state_dir, mid_us, batch_id, group_col, value_col,
+            ts_col, n_bins, bin_width,
         )
 
     q = (

@@ -55,15 +55,12 @@ def merge_ewma_batch(
     ts_col: str,
     value_col: str,
     offset_col: str,
-    retain: int | None = 2,
 ) -> None:
     cols = [*key_cols, ts_col, value_col, offset_col]
     part = _top_l(batch_df.select(*cols), key_cols, ts_col, offset_col)
     prior = read_state(batch_df.sparkSession, state_dir)
     merged = part if prior is None else prior.unionByName(part)
-    write_version(
-        _top_l(merged, key_cols, ts_col, offset_col), state_dir, retain=retain
-    )
+    write_version(_top_l(merged, key_cols, ts_col, offset_col), state_dir)
 
 
 def run_ewma_stream(

@@ -18,10 +18,9 @@ batch folds in three staged steps:
 SAME batch still chain (the in-batch case), and an already-set stage is
 never revised (its anchor predates the whole batch).  State is one row
 per user; each batch costs one aggregate plus one state join, both
-keyed on user_id.  Commit protocol: version-per-batch
-(streaming/transitions.py) — staged mins are deterministic in
-(prior, batch) but a replayed batch must not see its own output as
-prior state.
+keyed on user_id.  The state commits at its batch id
+(streaming/upsert.py) — staged mins are deterministic in (prior, batch)
+but a replayed batch must not see its own output as prior state.
 """
 
 from __future__ import annotations
@@ -31,8 +30,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .transitions import _commit, _read_version, _versions
-from .upsert import _state_version
+from .upsert import read_state, write_version
 
 _STAGES = ("view", "click", "purchase")
 
@@ -47,13 +45,7 @@ def _stage_min(stage: str, after) -> F.Column:
 def merge_funnel_batch(
     batch_df: DataFrame, state_dir: str, batch_id: int
 ) -> None:
-    spark = batch_df.sparkSession
-    prior_vs = [v for v in _versions(state_dir) if v < batch_id]
-    if prior_vs:
-        prior = _read_version(spark, state_dir, max(prior_vs))
-    else:
-        prior = None
-
+    prior = read_state(batch_df.sparkSession, state_dir, below=batch_id)
     ev = batch_df.select("user_id", "event_type", "ts")
     if prior is not None:
         ev = ev.join(prior, "user_id", "left")
@@ -103,7 +95,7 @@ def merge_funnel_batch(
             out.select("user_id"), "user_id", "left_anti"
         )
         out = out.unionByName(untouched)
-    _commit(out, state_dir, batch_id)
+    write_version(out, state_dir, version=batch_id)
 
 
 def run_funnel_stream(stream_df: DataFrame, state_dir: str) -> None:
@@ -120,8 +112,7 @@ def run_funnel_stream(stream_df: DataFrame, state_dir: str) -> None:
 
 def read_funnel(spark: SparkSession, state_dir: str) -> DataFrame:
     """Current per-user funnel in the batch query's output shape."""
-    v = _state_version(state_dir)
-    st = _read_version(spark, state_dir, v)
+    st = read_state(spark, state_dir)
     depth = (
         F.when(F.col("first_view").isNotNull(), 1).otherwise(0)
         + F.when(F.col("first_click").isNotNull(), 1).otherwise(0)

@@ -15,11 +15,10 @@ State shape (one packed frame, two row kinds):
   - corpus row  (doc_id NULL): (n_docs, sum_dl) totals over ALL
     documents seen, matched or not (avgdl needs the whole corpus).
 
-Sums are additive (NOT idempotent), so exactly-once comes from the
-version-per-batch commit protocol shared with streaming/transitions.py:
-state version == micro-batch id, a replayed batch overwrites its own
-partial commit instead of double-counting, and _commit prunes to the
-newest two versions so disk stays O(state).
+Sums are additive (NOT idempotent), so the state commits at its
+micro-batch id (streaming/upsert.py): a replayed batch overwrites its
+own partial commit instead of double-counting, and each commit prunes
+to the newest two versions so disk stays O(state).
 
 At scale: postings are keyed on (doc, term) — a plain hash-partitioned
 state table; the corpus row is one record; each batch pays one
@@ -37,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.retrieval import BM25_B, BM25_K1
-from .transitions import _commit, _read_version, _versions
+from .upsert import read_state, write_version
 
 _COLS = ["doc_id", "term", "tf", "dl", "n_docs", "sum_dl"]
 
@@ -107,14 +106,13 @@ def merge_index_batch(
     batch_id: int,
 ) -> None:
     """Apply one micro-batch.  Prior = greatest committed version with
-    id < batch_id (transitions protocol), so a crashed batch's re-run
-    deterministically overwrites its own partial commit."""
-    spark = batch_df.sparkSession
-    prior_vs = [v for v in _versions(state_dir) if v < batch_id]
+    id < batch_id, so a crashed batch's re-run deterministically
+    overwrites its own partial commit."""
+    prior = read_state(batch_df.sparkSession, state_dir, below=batch_id)
     bs = _batch_state(batch_df, query_terms)
-    if prior_vs:
-        bs = _merge(_read_version(spark, state_dir, max(prior_vs)), bs)
-    _commit(bs.select(*_COLS), state_dir, batch_id)
+    if prior is not None:
+        bs = _merge(prior, bs)
+    write_version(bs.select(*_COLS), state_dir, version=batch_id)
 
 
 def run_index_stream(
@@ -141,9 +139,7 @@ def read_bm25_topk(
     """Current top-k from the maintained index state — the identical
     scoring expression as the batch operator, reading postings instead
     of re-tokenizing the corpus."""
-    from .upsert import _state_version
-
-    state = _read_version(spark, state_dir, _state_version(state_dir))
+    state = read_state(spark, state_dir)
     postings = state.filter(F.col("doc_id").isNotNull()).select(
         "doc_id", "term", "tf", "dl"
     )

@@ -14,8 +14,8 @@ Two segments of one user merge associatively: stats fold with
 count-sum/min/max/sum, plus ONE bridge gap ``later.first_ts -
 earlier.last_ts`` between the adjacent endpoints; the merged segment
 keeps the outer endpoints.  Gaps stay exact integer microseconds end to
-end.  Commit protocol (version = micro-batch id, re-run overwrites its
-own commit deterministically) is shared with the transitions state.
+end.  The state commits at its micro-batch id (streaming/upsert.py), so
+a re-run overwrites its own commit deterministically.
 
 Scale: O(users) state rows; each micro-batch shuffles once on user_id
 for the in-batch window, and the merge is a keyed aggregate over
@@ -29,8 +29,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .transitions import _commit, _read_version, _versions
-from .upsert import _state_version
+from .upsert import read_state, write_version
 
 
 def _batch_partial(batch_df: DataFrame) -> DataFrame:
@@ -91,12 +90,11 @@ def _merge(prior: DataFrame, part: DataFrame) -> DataFrame:
 def merge_interarrival_batch(
     batch_df: DataFrame, state_dir: str, batch_id: int
 ) -> None:
-    spark = batch_df.sparkSession
-    prior_vs = [v for v in _versions(state_dir) if v < batch_id]
+    prior = read_state(batch_df.sparkSession, state_dir, below=batch_id)
     part = _batch_partial(batch_df)
-    if prior_vs:
-        part = _merge(_read_version(spark, state_dir, max(prior_vs)), part)
-    _commit(part, state_dir, batch_id)
+    if prior is not None:
+        part = _merge(prior, part)
+    write_version(part, state_dir, version=batch_id)
 
 
 def run_interarrival_stream(stream_df: DataFrame, state_dir: str) -> None:
@@ -113,8 +111,7 @@ def run_interarrival_stream(stream_df: DataFrame, state_dir: str) -> None:
 
 def read_interarrival(spark: SparkSession, state_dir: str) -> DataFrame:
     """Current stats in the batch query's output shape."""
-    v = _state_version(state_dir)
-    return _read_version(spark, state_dir, v).select(
+    return read_state(spark, state_dir).select(
         "user_id",
         "n_gaps",
         F.col("min_gap_us").cast("long").alias("min_gap_us"),

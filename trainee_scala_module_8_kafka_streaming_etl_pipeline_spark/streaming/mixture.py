@@ -9,9 +9,8 @@ each micro-batch's partial counts sum-merge into it, and the mixture
 output is recomputed from O(sources x bp) state at read time — no
 event data is ever retained.
 
-Sum-merge is not idempotent, so this sink uses the version-per-batch
-commit protocol (streaming/transitions.py): the state version number is
-the micro-batch id and a crashed batch's re-run deterministically
+Sum-merge is not idempotent, so the state commits at its micro-batch id
+(streaming/upsert.py): a crashed batch's re-run deterministically
 overwrites its own commit instead of double-counting.
 """
 
@@ -23,8 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import sampling
-from .transitions import _commit, _read_version, _versions
-from .upsert import _state_version
+from .upsert import read_state, write_version
 
 TEMP_BP = 10000
 
@@ -38,17 +36,15 @@ def _batch_hist(batch_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 def merge_mixture_batch(
     batch_df: DataFrame, state_dir: str, batch_id: int, id_col: str = "doc_id"
 ) -> None:
-    spark = batch_df.sparkSession
     part = _batch_hist(batch_df, id_col)
-    prior_vs = [v for v in _versions(state_dir) if v < batch_id]
-    if prior_vs:
+    prior = read_state(batch_df.sparkSession, state_dir, below=batch_id)
+    if prior is not None:
         part = (
-            _read_version(spark, state_dir, max(prior_vs))
-            .unionByName(part)
+            prior.unionByName(part)
             .groupBy("source", "b")
             .agg(F.sum("c").alias("c"))
         )
-    _commit(part, state_dir, batch_id)
+    write_version(part, state_dir, version=batch_id)
 
 
 def run_mixture_stream(
@@ -108,8 +104,7 @@ def mixture_from_hist(hist: DataFrame, budget: float = 0.5) -> DataFrame:
 def read_mixture(
     spark: SparkSession, state_dir: str, budget: float = 0.5
 ) -> DataFrame:
-    v = _state_version(state_dir)
-    return mixture_from_hist(_read_version(spark, state_dir, v), budget)
+    return mixture_from_hist(read_state(spark, state_dir), budget)
 
 
 __all__ = [

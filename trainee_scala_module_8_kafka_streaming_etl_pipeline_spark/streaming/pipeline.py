@@ -38,7 +38,7 @@ from __future__ import annotations
 
 import os
 import threading
-from collections.abc import Mapping, Sequence
+from collections.abc import Sequence
 
 from pyspark.errors import StreamingQueryException
 from pyspark.sql import DataFrame, SparkSession
@@ -226,13 +226,10 @@ def _dir_bytes(*dirs: str) -> int:
 
 
 def _start(
-    spark: SparkSession,
-    writer: DataStreamWriter,
-    src_dirs: Sequence[str],
-    confs: Mapping[str, str] | None = None,
+    spark: SparkSession, writer: DataStreamWriter, src_dirs: Sequence[str]
 ) -> StreamingQuery:
-    """Start ``writer`` with ``confs``, and ``spark.sql.shuffle.partitions``
-    = ``input_width`` of the bytes under ``src_dirs``, scoped to the
+    """Start ``writer`` with ``spark.sql.shuffle.partitions`` =
+    ``input_width`` of the bytes under ``src_dirs``, scoped to the
     ``start()`` call.
 
     The width is set on every start: a fresh checkpoint records it as
@@ -240,11 +237,8 @@ def _start(
     takes that count from the checkpoint for the stateful operators only
     — the query's other shuffles, its ``foreachBatch`` merges included,
     run at the session's ``shuffle.partitions``."""
-    confs = {
-        **(confs or {}),
-        "spark.sql.shuffle.partitions": str(input_width(spark, _dir_bytes(*src_dirs))),
-    }
-    with start_confs(spark, confs):
+    width = input_width(spark, _dir_bytes(*src_dirs))
+    with start_confs(spark, {"spark.sql.shuffle.partitions": str(width)}):
         return writer.start()
 
 
@@ -356,25 +350,6 @@ def run_flagship_stream(spark: SparkSession, src_dir: str, work_dir: str) -> Dat
     orders_dir = os.path.join(src_dir, "orders")
     shipments_dir = os.path.join(src_dir, "shipments")
 
-    # Query 1 is no-data-batch-neutral (round 11): a watermark-free
-    # update-mode aggregation — with no watermark there is nothing for
-    # a trailing batch to advance or flush, within a run or across
-    # runs, so skipping it saves its trigger + per-partition
-    # state-store commit for zero output rows.  Query 2 (the interval
-    # join) KEEPS its trailing batch (round 12, ADVICE): this pipeline
-    # is explicitly multi-round over one checkpoint, and the trailing
-    # batch is what commits the final watermark advancement — skipping
-    # it would restart the next round with a one-batch-stale watermark,
-    # admitting late rows canonical semantics would drop.  (The
-    # one-shot q_streaming_interval_join entry still skips it safely —
-    # single availableNow run, no cross-round state.)
-
-    # --- query 1: customers CDC -> streaming latest_by_offset table (A2/A3)
-    customers = file_stream(spark, customers_dir, CUSTOMERS_SCHEMA, fmt="json")
-    compacted = streaming_latest_by_offset(
-        customers, keys=["id"], offset_col="_offset",
-        value_cols=["name", "age", "__deleted"],
-    )
     customers_done = _Outcome("customers_by_key query")
 
     def _enrich_with_customer_state(batch_df: DataFrame) -> DataFrame:
@@ -393,22 +368,27 @@ def run_flagship_stream(spark: SparkSession, src_dir: str, work_dir: str) -> Dat
             batch_df, dim, on=F.col("customer_id") == F.col("id"), how="left"
         ).drop("id")
 
+    # --- query 1: customers CDC -> customers_by_key (A2/A3).  A stateless
+    # append query: the keyed upsert sink keeps the latest row per key by
+    # offset, so the table is materialized once, in the sink.
     q1 = _start(
         spark,
-        compacted.writeStream.outputMode("update")
+        file_stream(spark, customers_dir, CUSTOMERS_SCHEMA, fmt="json")
+        .writeStream.outputMode("append")
         .foreachBatch(
             keyed_upsert_sink(customers_state, keys=["id"], offset_col="_offset")
         )
         .option("checkpointLocation", os.path.join(ckpt, "customers"))
         .trigger(availableNow=True),
         [customers_dir],
-        {"spark.sql.streaming.noDataMicroBatches.enabled": "false"},
     )
     queries = [q1]
     try:
         # --- query 2, started without waiting for q1: orders x shipments
         # watermarked interval join (J2) with foreachBatch temporal
-        # enrichment (J1) + keyed upsert (S9/E2)
+        # enrichment (J1) + keyed upsert (S9/E2).  It keeps its trailing
+        # no-data batch: that batch commits the final watermark
+        # advancement the next round starts from.
         q2 = _start(
             spark,
             _shipped_stream(spark, orders_dir, shipments_dir).writeStream

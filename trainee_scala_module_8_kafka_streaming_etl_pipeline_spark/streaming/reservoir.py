@@ -36,7 +36,6 @@ def merge_reservoir_batch(
     weight_col: str,
     k: int = 100,
     id_col: str = "doc_id",
-    retain: int | None = 2,
 ) -> None:
     """One reservoir merge: state' = min-k(state ∪ keyed(batch))."""
     keyed = (
@@ -53,7 +52,6 @@ def merge_reservoir_batch(
     write_version(
         merged.dropDuplicates([id_col]).orderBy("samp_key", id_col).limit(k),
         state_dir,
-        retain=retain,
     )
 
 

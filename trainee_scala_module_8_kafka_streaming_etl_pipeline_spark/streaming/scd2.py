@@ -14,7 +14,7 @@ the untouched closed rows through unchanged.
 
 Correct under the ordered-log arrival contract (a key's changes arrive
 in event-time order — /root/reference/README.md:436); commit protocol
-is version-per-batch (streaming/transitions.py) so crash replay
+is version = batch id (streaming/upsert.py) so crash replay
 deterministically overwrites.
 """
 
@@ -25,8 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .transitions import _commit, _read_version, _versions
-from .upsert import _state_version
+from .upsert import read_state, write_version
 
 _COLS = ["user_id", "event_id", "value", "valid_from", "valid_to", "is_current"]
 
@@ -48,15 +47,13 @@ def _chain(rows: DataFrame) -> DataFrame:
 def merge_scd2_batch(
     batch_df: DataFrame, state_dir: str, batch_id: int
 ) -> None:
-    spark = batch_df.sparkSession
     changes = batch_df.select(
         "user_id", "event_id", "value", F.col("ts").alias("valid_from")
     )
-    prior_vs = [v for v in _versions(state_dir) if v < batch_id]
-    if not prior_vs:
-        _commit(_chain(changes), state_dir, batch_id)
+    prior = read_state(batch_df.sparkSession, state_dir, below=batch_id)
+    if prior is None:
+        write_version(_chain(changes), state_dir, version=batch_id)
         return
-    prior = _read_version(spark, state_dir, max(prior_vs))
     affected = changes.select("user_id").distinct()
     # closed rows and unaffected keys pass through untouched; only the
     # affected keys' open rows re-enter the window with the batch
@@ -72,7 +69,9 @@ def merge_scd2_batch(
         touched_open.select("user_id", "event_id", "value", "valid_from")
         .unionByName(changes)
     )
-    _commit(untouched.unionByName(rechained).select(*_COLS), state_dir, batch_id)
+    write_version(
+        untouched.unionByName(rechained).select(*_COLS), state_dir, version=batch_id
+    )
 
 
 def run_scd2_stream(stream_df: DataFrame, state_dir: str) -> None:
@@ -88,8 +87,7 @@ def run_scd2_stream(stream_df: DataFrame, state_dir: str) -> None:
 
 
 def read_scd2(spark: SparkSession, state_dir: str) -> DataFrame:
-    v = _state_version(state_dir)
-    return _read_version(spark, state_dir, v).select(*_COLS)
+    return read_state(spark, state_dir).select(*_COLS)
 
 
 __all__ = ["merge_scd2_batch", "run_scd2_stream", "read_scd2"]

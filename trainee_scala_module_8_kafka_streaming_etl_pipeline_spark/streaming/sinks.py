@@ -22,7 +22,6 @@ def topn_sink(
     order_col: str,
     n: int,
     tiebreak_cols: Sequence[str] = (),
-    retain: int | None = 2,
 ) -> Callable[[DataFrame, int], None]:
     """``foreachBatch`` function maintaining a global top-n leaderboard
     across micro-batches.
@@ -35,20 +34,19 @@ def topn_sink(
     maintained state equals the batch query over all data seen so far —
     which makes the plain batch top-n SQL an exact oracle, and state
     size O(n) regardless of stream length.  Ties are broken by
-    ``tiebreak_cols`` ascending so re-delivery is idempotent.
+    ``tiebreak_cols`` ascending so the result is deterministic.  The
+    fold is not idempotent (a re-delivered row would take a second
+    slot), so the leaderboard commits at its micro-batch id.
     """
     from .upsert import read_state, write_version
 
     order = [F.desc(order_col), *[F.asc(c) for c in tiebreak_cols]]
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         local = batch_df.orderBy(*order).limit(n)
-        prior = read_state(spark, state_dir)
+        prior = read_state(batch_df.sparkSession, state_dir, below=batch_id)
         merged = local if prior is None else prior.unionByName(local)
-        write_version(
-            merged.orderBy(*order).limit(n), state_dir, retain=retain
-        )
+        write_version(merged.orderBy(*order).limit(n), state_dir, version=batch_id)
 
     return _sink
 

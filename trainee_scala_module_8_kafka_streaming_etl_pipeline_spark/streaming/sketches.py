@@ -10,8 +10,11 @@ Each micro-batch folds its HLL registers (operators/sketches.py) into
 the versioned state table with a max() merge.  max is associative,
 commutative, and idempotent, so the result is batch-split invariant
 AND re-delivery tolerant: replaying a batch after a failed commit
-cannot move any register backwards.  The DuckDB oracle is therefore
-simply the batch HLL query over the same rows.
+cannot move any register backwards, so the HLL state commits at
+pointer + 1.  The CMS and histogram states sum-merge, which is not
+idempotent, so they commit at their micro-batch id (the batch-id
+policy of streaming/upsert.py).  The DuckDB oracle is therefore simply
+the batch sketch query over the same rows.
 """
 
 from __future__ import annotations
@@ -32,7 +35,6 @@ def merge_hll_batch(
     key_col: str,
     group_cols: Sequence[str] = (),
     m: int = SK.HLL_M,
-    retain: int | None = 2,
 ) -> None:
     """One register merge: state' = max-merge(state, registers(batch))."""
     regs = SK.hll_registers(batch_df, key_col, group_cols, m)
@@ -41,7 +43,7 @@ def merge_hll_batch(
     folded = merged.groupBy(*group_cols, "bucket").agg(
         F.max("v_max").alias("v_max")
     )
-    write_version(folded, state_dir, retain=retain)
+    write_version(folded, state_dir)
 
 
 def run_hll_stream(
@@ -81,22 +83,22 @@ def merge_cms_batch(
     batch_df: DataFrame,
     state_dir: str,
     key_col: str,
+    batch_id: int,
     d: int = SK.CMS_D,
     w: int = SK.CMS_W,
-    retain: int | None = 2,
 ) -> None:
     """One count-min merge: state' = cellwise-sum(state, cells(batch)).
 
     Unlike the HLL max, the CMS merge is additive — still associative
-    and commutative (batch-split invariant), but NOT idempotent, so the
-    exactly-once batch boundary comes from the streaming checkpoint
-    rather than the merge itself (replaying a committed batch would
-    double-count; the foreachBatch checkpoint prevents exactly that)."""
+    and commutative (batch-split invariant), but NOT idempotent:
+    folding a re-delivered batch into its own commit would double-count
+    it.  So the prior is the greatest version below ``batch_id`` and
+    the commit overwrites ``v=<batch_id>``."""
     cells = SK.cms_cells(batch_df, key_col, d, w)
-    prior = read_state(batch_df.sparkSession, state_dir)
+    prior = read_state(batch_df.sparkSession, state_dir, below=batch_id)
     merged = cells if prior is None else prior.unionByName(cells)
     folded = merged.groupBy("i", "col").agg(F.sum("cnt").alias("cnt"))
-    write_version(folded, state_dir, retain=retain)
+    write_version(folded, state_dir, version=batch_id)
 
 
 def run_cms_stream(
@@ -109,7 +111,7 @@ def run_cms_stream(
     """Maintain streaming CMS cells as a StreamingQuery (availableNow)."""
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_cms_batch(batch_df, state_dir, key_col, d, w)
+        merge_cms_batch(batch_df, state_dir, key_col, batch_id, d, w)
 
     q = (
         stream_df.writeStream.foreachBatch(_sink)
@@ -138,20 +140,19 @@ def merge_hist_batch(
     batch_df: DataFrame,
     state_dir: str,
     value_col: str,
+    batch_id: int,
     group_cols: Sequence[str] = (),
     width: float = SK.HIST_BIN_WIDTH,
-    retain: int | None = 2,
 ) -> None:
     """One histogram merge: state' = sum-merge(state, bins(batch)).
     Sum is associative/commutative, so the maintained state is
-    batch-split invariant (same caveat as CMS: idempotence under
-    re-delivery comes from the checkpointed source offsets, not the
-    merge itself)."""
+    batch-split invariant; like CMS it is not idempotent, so it commits
+    at ``batch_id``."""
     bins = SK.hist_bins(batch_df, value_col, group_cols, width)
-    prior = read_state(batch_df.sparkSession, state_dir)
+    prior = read_state(batch_df.sparkSession, state_dir, below=batch_id)
     merged = bins if prior is None else prior.unionByName(bins)
     folded = merged.groupBy(*group_cols, "bin").agg(F.sum("c").alias("c"))
-    write_version(folded, state_dir, retain=retain)
+    write_version(folded, state_dir, version=batch_id)
 
 
 def run_hist_stream(
@@ -165,7 +166,7 @@ def run_hist_stream(
     (availableNow) with checkpointed offsets next to the state."""
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_hist_batch(batch_df, state_dir, value_col, group_cols, width)
+        merge_hist_batch(batch_df, state_dir, value_col, batch_id, group_cols, width)
 
     q = (
         stream_df.writeStream.foreachBatch(_sink)

@@ -24,12 +24,12 @@ order as long as each batch holds a contiguous time-slice per user
 (true for an ordered log replayed by files; the same arrival-order
 contract latest_by_offset relies on, /root/reference/README.md:436).
 
-Exactly-once: the state version number IS the micro-batch id.  A batch
-re-delivered after a crash — even a crash after the pointer swap but
-before the checkpoint commit — recomputes from the greatest version
-STRICTLY BELOW its own id, so the re-run is a deterministic overwrite,
-never a double-count.  (The sum-merge alone would double-count; the
-version-per-batch commit is what makes it idempotent.)
+Exactly-once: the counts sum-merge, so the state commits at its
+micro-batch id (the batch-id policy of streaming/upsert.py): a batch
+re-delivered after a crash — even after the pointer swap but before the
+checkpoint commit — recomputes from the greatest version STRICTLY BELOW
+its own id, so the re-run is a deterministic overwrite, never a
+double-count.
 
 Scale: state is O(users) segments + O(types²) counts; each batch
 shuffles once on user_id for the window and once for the segment
@@ -43,48 +43,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .upsert import _POINTER, _state_version
+from .upsert import read_state, write_version
 
 _SEG_COLS = [
     "user_id", "first_type", "first_ts", "first_off",
     "last_type", "last_ts", "last_off",
 ]
-
-
-def _versions(state_dir: str) -> list[int]:
-    try:
-        names = os.listdir(state_dir)
-    except FileNotFoundError:
-        return []
-    return sorted(
-        int(d.split("=", 1)[1])
-        for d in names
-        if d.startswith("v=") and d.split("=", 1)[1].isdigit()
-    )
-
-
-def _read_version(spark: SparkSession, state_dir: str, v: int) -> DataFrame:
-    return spark.read.parquet(os.path.join(state_dir, f"v={v}"))
-
-
-def _commit(df: DataFrame, state_dir: str, version: int) -> None:
-    """Write ``v=<version>`` (idempotent overwrite) and swap the pointer.
-
-    After the swap, prune everything older than the newest two versions:
-    each commit is a FULL state copy, so without retention the sink's
-    disk footprint grows with batch count x state size.  ``keep=2``
-    preserves the crash-replay contract (readers resolve the greatest
-    version strictly below their batch id, which is at most one behind
-    the pointer) while bounding the footprint at 2x state size."""
-    from .upsert import vacuum_versions
-
-    os.makedirs(state_dir, exist_ok=True)
-    df.write.mode("overwrite").parquet(os.path.join(state_dir, f"v={version}"))
-    tmp = os.path.join(state_dir, f"{_POINTER}.tmp")
-    with open(tmp, "w") as fh:
-        fh.write(str(version))
-    os.replace(tmp, os.path.join(state_dir, _POINTER))
-    vacuum_versions(state_dir, keep=2)
 
 
 def _batch_state(batch_df: DataFrame) -> DataFrame:
@@ -175,12 +139,11 @@ def merge_transitions_batch(
     """Apply one micro-batch.  Prior = greatest committed version with
     id < ``batch_id`` — NOT the pointer — so a crashed batch's re-run
     deterministically overwrites its own partial commit."""
-    spark = batch_df.sparkSession
-    prior_vs = [v for v in _versions(state_dir) if v < batch_id]
+    prior = read_state(batch_df.sparkSession, state_dir, below=batch_id)
     bs = _batch_state(batch_df)
-    if prior_vs:
-        bs = _merge(_read_version(spark, state_dir, max(prior_vs)), bs)
-    _commit(bs, state_dir, batch_id)
+    if prior is not None:
+        bs = _merge(prior, bs)
+    write_version(bs, state_dir, version=batch_id)
 
 
 def run_transitions_stream(stream_df: DataFrame, state_dir: str) -> None:
@@ -199,9 +162,7 @@ def read_transitions(spark: SparkSession, state_dir: str) -> DataFrame:
     """Current transition matrix in the batch query's output shape
     (from_type, to_type, n, p) — row-normalized at read time from the
     count state (the tiny types x types frame, no event-data pass)."""
-    v = _state_version(state_dir)
-    state = _read_version(spark, state_dir, v)
-    counts = state.filter(F.col("user_id").isNull()).select(
+    counts = read_state(spark, state_dir).filter(F.col("user_id").isNull()).select(
         "from_type", "to_type", "n"
     )
     wrow = Window.partitionBy("from_type")

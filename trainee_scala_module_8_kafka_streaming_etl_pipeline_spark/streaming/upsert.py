@@ -1,4 +1,5 @@
-"""Keyed-upsert sink with delete propagation (reference S9/E2).
+"""Keyed-upsert sink with delete propagation (reference S9/E2), and the
+one state-table commit protocol every streaming state sink shares.
 
 The reference's Elasticsearch sink writes each record under doc ``_id`` =
 record key, so re-delivery and key updates overwrite idempotently
@@ -16,6 +17,29 @@ are dropped — then written as a new version directory with an atomically
 swapped pointer file.  Readers never see a half-written version; a
 failed batch leaves the old pointer (re-run is idempotent because the
 merge is deterministic in (prior, batch)).
+
+The state table: immutable-per-commit ``v=N`` parquet version dirs plus
+a ``_LATEST`` pointer file naming the current one, swapped by rename.
+This module is the only one that knows that format: sinks go through
+``read_state``, ``write_version`` and ``vacuum_versions``.  One protocol,
+two version policies, picked by the merge's algebra:
+
+* **Idempotent merge → pointer + 1** (``write_version(df, dir)``, prior
+  = ``read_state(spark, dir)``): the upsert/dedup MERGEs, HLL max,
+  ewma, reservoir, cohort.  A batch re-delivered after the pointer swap
+  folds into its own output and changes nothing, so the version number
+  need not name the batch — and a no-data batch commits nothing new.
+* **Additive merge → version = batch id** (``write_version(df, dir,
+  version=batch_id)``, prior = ``read_state(spark, dir,
+  below=batch_id)``): sums and counts (CMS, histograms, bars' tick
+  counts, drift, top-n, transitions, SCD2, funnel, disorder,
+  interarrival, mixture, the BM25 index, LTV).  A re-delivered batch —
+  even after the pointer swap, before the checkpoint commit — recomputes
+  from the greatest version strictly below its own id, so its re-run is
+  a deterministic overwrite, never a double count.
+
+Each commit keeps the newest ``_RETAIN`` = 2 versions: the pointer's,
+and the one before it that a re-delivered batch-id commit reads.
 
 At scale the same surface is one ``MERGE INTO`` on a Delta/Iceberg table
 (WHEN MATCHED AND __deleted THEN DELETE); the versioned-parquet
@@ -36,14 +60,16 @@ from pyspark.sql import functions as F
 from ..operators.compaction import latest_by_offset
 
 _POINTER = "_LATEST"
+_RETAIN = 2
 
 # (version-dir path -> StructType) recorded by write_version at commit
 # time: read_state then declares the schema instead of re-running parquet
 # footer inference (~60 ms of driver latency per read — every micro-batch
-# merge reads 1-2 state tables, round 11).  Keyed by the immutable
-# version dir (never rewritten in place; vacuumed dirs simply age out of
-# use), with inference as the fallback for readers in a fresh process
-# (crash replay, external readers).  The sinks of one pipeline commit
+# merge reads 1-2 state tables, round 11).  Keyed by the version dir
+# (rewritten in place only by a re-delivered batch-id commit, which
+# re-records it; vacuumed dirs simply age out of use), with inference as
+# the fallback for readers in a fresh process (crash replay, external
+# readers).  The sinks of one pipeline commit
 # from concurrent foreachBatch threads, so the prune-and-insert holds a
 # lock (a lone ``get`` is atomic).
 _SCHEMA_MEMO: dict[str, object] = {}
@@ -58,9 +84,32 @@ def _state_version(state_dir: str) -> int | None:
         return None
 
 
-def read_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
-    """Current state table, or None before the first committed version."""
-    v = _state_version(state_dir)
+def _listed_versions(state_dir: str) -> list[int]:
+    try:
+        names = os.listdir(state_dir)
+    except FileNotFoundError:
+        return []
+    return sorted(
+        int(d.split("=", 1)[1])
+        for d in names
+        if d.startswith("v=") and d.split("=", 1)[1].isdigit()
+    )
+
+
+def read_state(
+    spark: SparkSession, state_dir: str, below: int | None = None
+) -> DataFrame | None:
+    """Current state table, or None before the first committed version.
+
+    ``below=batch_id`` reads the greatest version strictly below that id
+    instead of the pointer's: the prior of a batch-id commit, so a
+    re-delivered batch never folds in its own earlier commit (or an
+    orphan dir a crash left at its id).  Without it the read is one
+    pointer-file read, with no directory listing."""
+    if below is None:
+        v = _state_version(state_dir)
+    else:
+        v = max((x for x in _listed_versions(state_dir) if x < below), default=None)
     if v is None:
         return None
     path = os.path.join(state_dir, f"v={v}")
@@ -77,7 +126,6 @@ def upsert_batch(
     offset_col: str,
     deleted_col: str | None = "__deleted",
     allow_schema_evolution: bool = False,
-    retain: int | None = 2,
     skip_empty_probe: bool = False,
 ) -> None:
     """One MERGE: fold ``batch_df`` into the state table at ``state_dir``.
@@ -146,30 +194,26 @@ def upsert_batch(
     if deleted_col:
         compacted = compacted.filter(~F.col(deleted_col)).drop(deleted_col)
 
-    write_version(compacted, state_dir, retain=retain)
+    write_version(compacted, state_dir)
 
 
-def write_version(
-    df: DataFrame, state_dir: str, retain: int | None = 2
-) -> None:
-    """Commit ``df`` as the next state version with an atomic pointer
-    swap — the shared primitive under every state table (upsert MERGE,
-    sketch register merges).
+def write_version(df: DataFrame, state_dir: str, version: int | None = None) -> None:
+    """Commit ``df`` as a state version with an atomic pointer swap — the
+    shared primitive under every state table.
 
-    After a successful swap, versions older than the newest ``retain``
-    are vacuumed (pass ``retain=None`` to keep everything, e.g. for a
-    time-travel fixture).  Without retention every micro-batch leaves a
-    full state copy behind, so the sink's disk footprint grows with
-    batch COUNT × state size rather than state size.  Every sink
-    factory (keyed_upsert_sink, topn_sink, the sketch/bars/ewma/drift/
-    reservoir/cohort merges) threads its own ``retain`` through to
-    here, so a deployment with external time-travel readers opts out at
-    the sink it configures rather than patching call sites.
+    Without ``version`` the commit is the pointer's version + 1 (the
+    idempotent merges); ``version=batch_id`` overwrites ``v=<batch_id>``
+    (the additive merges, see the module docstring).  After the swap,
+    versions older than the newest ``_RETAIN`` are vacuumed: without
+    retention every micro-batch leaves a full state copy behind, so the
+    sink's disk footprint grows with batch COUNT × state size rather
+    than state size.
     """
-    prev = _state_version(state_dir)
-    next_v = 0 if prev is None else prev + 1
+    if version is None:
+        prev = _state_version(state_dir)
+        version = 0 if prev is None else prev + 1
     os.makedirs(state_dir, exist_ok=True)
-    vdir = os.path.join(state_dir, f"v={next_v}")
+    vdir = os.path.join(state_dir, f"v={version}")
     df.write.mode("overwrite").parquet(vdir)
     # keep only the newest version's schema per state dir — a long-lived
     # sink must not grow the memo by one entry per batch
@@ -181,32 +225,27 @@ def write_version(
         _SCHEMA_MEMO[vdir] = schema
     tmp = os.path.join(state_dir, f"{_POINTER}.tmp")
     with open(tmp, "w") as fh:
-        fh.write(str(next_v))
+        fh.write(str(version))
     os.replace(tmp, os.path.join(state_dir, _POINTER))
-    if retain is not None:
-        vacuum_versions(state_dir, keep=retain)
+    vacuum_versions(state_dir, keep=_RETAIN)
 
 
-def vacuum_versions(state_dir: str, keep: int = 2) -> list[int]:
+def vacuum_versions(state_dir: str, keep: int = _RETAIN) -> list[int]:
     """Drop state versions older than the newest ``keep`` (never the
     current pointer).  The MERGE writes a whole new version per batch,
     so without retention the sink's footprint grows with batch COUNT
     rather than state SIZE — at one batch/minute that is 1440 full
     copies a day.  Safe because readers resolve the pointer first and
     only the newest version is ever the pointer target; ``keep >= 2``
-    leaves an in-flight reader's version on disk. Returns the dropped
-    version numbers.
+    leaves an in-flight reader's version, and a re-delivered batch-id
+    commit's prior, on disk. Returns the dropped version numbers.
     """
     import shutil
 
     cur = _state_version(state_dir)
     if cur is None:
         return []
-    versions = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(state_dir)
-        if d.startswith("v=") and d.split("=", 1)[1].isdigit()
-    )
+    versions = _listed_versions(state_dir)
     live = set(versions[-keep:]) | {cur}
     dropped = []
     for v in versions:
@@ -223,7 +262,6 @@ def keyed_upsert_sink(
     deleted_col: str | None = "__deleted",
     transform: Callable[[DataFrame], DataFrame] | None = None,
     allow_schema_evolution: bool = False,
-    retain: int | None = 2,
 ) -> Callable[[DataFrame, int], None]:
     """``foreachBatch`` function maintaining a keyed-upsert state table —
     the writeStream side of reference S9/E2.  ``transform`` (optional)
@@ -270,7 +308,6 @@ def keyed_upsert_sink(
                 offset_col,
                 deleted_col,
                 allow_schema_evolution=allow_schema_evolution,
-                retain=retain,
                 skip_empty_probe=True,
             )
             return
@@ -281,7 +318,6 @@ def keyed_upsert_sink(
             offset_col,
             deleted_col,
             allow_schema_evolution=allow_schema_evolution,
-            retain=retain,
         )
 
     return _sink
