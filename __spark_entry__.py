@@ -34,6 +34,11 @@ from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.operators import 
     sketches,
 )
 from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.plans import flagship
+from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.session import start_confs
+from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.sources import (
+    run_query,
+    start_query,
+)
 
 # --------------------------------------------------------------------------
 # registry: name -> (spark_fn, oracle_sql | None)
@@ -6058,6 +6063,14 @@ def q_multimodal_decode_raw(spark, sf):
 # trigger -> memory sink) and returns the materialized result as a batch
 # DataFrame, so the driver's oracle compares streaming execution against
 # the same SQL as the batch form — a stronger check than rows-only.
+# Every query starts through streaming.sources.start_query / run_query,
+# which size its state from the bytes of the source paths it is given.
+
+
+def _events_src(sf):
+    """The events table as a stream source path: FileStreamSource wants a
+    directory or glob, not a literal file path."""
+    return f"{sf}/events.parque[t]"
 
 
 def _events_stream(spark, sf):
@@ -6068,8 +6081,7 @@ def _events_stream(spark, sf):
     )
 
     raw_schema = table_schema(spark, sf, "events")
-    # FileStreamSource wants a directory or glob, not a literal file path
-    sdf = spark.readStream.schema(raw_schema).parquet(f"{sf}/events.parque[t]")
+    sdf = spark.readStream.schema(raw_schema).parquet(_events_src(sf))
     ts_type = dict(sdf.dtypes)["ts"]
     if ts_type == "bigint":
         sdf = sdf.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -6080,64 +6092,9 @@ def _events_stream(spark, sf):
     return sdf
 
 
-from contextlib import contextmanager
-
-
-@contextmanager
-def _stream_partitions(spark, n: int = 8):
-    """Bound the number of streaming state-store partitions.
-
-    spark.sql.shuffle.partitions is captured at StreamingQuery start and
-    becomes the state-store instance count; it should track state SIZE,
-    not core count — at availableNow/backfill scale the per-instance
-    overhead of 32 stores quintuples wall time vs 8 (measured at sf0.1).
-    """
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-
-
-@contextmanager
-def _no_trailing_empty_batch(spark):
-    """Skip the trailing no-data micro-batch for queries where it is
-    provably output-neutral (round 11, guide §1.2 "don't compute things
-    you throw away").
-
-    availableNow appends one empty batch after the data so watermark-
-    gated operators can flush: append-mode window aggregates emit closed
-    windows there, and LEFT-outer interval joins emit their null-extended
-    unmatched rows there — those entries MUST keep it (e.g.
-    streaming_interval_join_left).  For a watermark-free update-mode
-    aggregation or an INNER interval join, the trailing batch emits
-    nothing — inner matches surface in the data batch that delivers
-    them and the batch only performs state eviction, a space
-    optimization with no effect on any current or future output row
-    (evicted rows are exactly those no in-window future row can match).
-    Profiled at sf0.1: the flagship's trailing batch cost ~1.1 s of
-    trigger + state-store commit for zero output rows.
-    """
-    key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    old = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
-
-
-def _run_to_memory(df, name: str, mode: str) -> None:
-    with _stream_partitions(df.sparkSession):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+def _run_to_memory(df, name: str, mode: str, sources) -> None:
+    writer = df.writeStream.format("memory").queryName(name).outputMode(mode)
+    start_query(df.sparkSession, writer, sources).awaitTermination()
 
 
 @_q(
@@ -6168,7 +6125,7 @@ def q_streaming_latest_by_offset(spark, sf):
         F.col("value").alias("latest_value"),
         F.col("event_id").alias("last_offset"),
     )
-    _run_to_memory(agg, "streaming_latest_by_offset", "complete")
+    _run_to_memory(agg, "streaming_latest_by_offset", "complete", _events_src(sf))
     return spark.table("streaming_latest_by_offset")
 
 
@@ -6194,7 +6151,7 @@ def q_streaming_windowed_agg(spark, sf):
         )
         .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "total_value")
     )
-    _run_to_memory(agg, "streaming_windowed_agg", "complete")
+    _run_to_memory(agg, "streaming_windowed_agg", "complete", _events_src(sf))
     return spark.table("streaming_windowed_agg")
 
 
@@ -6230,11 +6187,21 @@ def q_streaming_interval_join(spark, sf):
         F.col("p_ts").alias("purchase_ts"),
         F.col("k_ts").alias("click_ts"),
     )
-    # INNER interval join: every output row surfaces in the data batch
-    # that delivers its match; the trailing no-data batch only evicts
-    # state (see _no_trailing_empty_batch — the LEFT-outer twin keeps it).
-    with _no_trailing_empty_batch(spark):
-        _run_to_memory(out, "streaming_interval_join", "append")
+    # Skip the trailing no-data micro-batch: availableNow appends one after
+    # the data so watermark-gated operators can flush (LEFT-outer joins
+    # emit their null-extended rows there, so the twin entry keeps it).
+    # In an INNER interval join every output row surfaces in the data
+    # batch that delivers its match, and the trailing batch only evicts
+    # state that no future in-window row can match (profiled at sf0.1 on
+    # the flagship: ~1.1 s of trigger + state-store commit, zero rows).
+    writer = (
+        out.writeStream.format("memory")
+        .queryName("streaming_interval_join")
+        .outputMode("append")
+    )
+    with start_confs(spark, {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}):
+        q = start_query(spark, writer, _events_src(sf))
+    q.awaitTermination()
     return spark.table("streaming_interval_join")
 
 
@@ -6303,7 +6270,7 @@ def q_streaming_interval_join_left(spark, sf):
         F.col("p_ts").alias("purchase_ts"),
         F.col("k_ts").alias("click_ts"),
     )
-    _run_to_memory(out, "streaming_interval_join_left", "append")
+    _run_to_memory(out, "streaming_interval_join_left", "append", _events_src(sf))
     return spark.table("streaming_interval_join_left")
 
 
@@ -6344,17 +6311,12 @@ def q_streaming_cdc_upsert(spark, sf):
     )
     flat = unwrap_rewrite(envelopes, keep=("_offset",))
     state_dir = tempfile.mkdtemp(prefix="cdc_upsert_state_")
-    with _stream_partitions(spark):
-        q = (
-            flat.writeStream.outputMode("append")
-            .foreachBatch(
-                keyed_upsert_sink(state_dir, keys=["user_id"], offset_col="_offset")
-            )
-            .option("checkpointLocation", f"{state_dir}/_ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_query(
+        flat,
+        keyed_upsert_sink(state_dir, keys=["user_id"], offset_col="_offset"),
+        _events_src(sf),
+        state_dir,
+    )
     return read_state(spark, state_dir)
 
 
@@ -6419,7 +6381,7 @@ def q_streaming_avro_topic(spark, sf):
         .cast("bigint")
         .alias("sum_value_micro"),
     )
-    _run_to_memory(agg, "streaming_avro_topic", "complete")
+    _run_to_memory(agg, "streaming_avro_topic", "complete", topic)
     return spark.table("streaming_avro_topic")
 
 
@@ -6520,7 +6482,7 @@ def q_streaming_avro_evolution(spark, sf):
         .cast("bigint")
         .alias("sum_value_micro"),
     )
-    _run_to_memory(agg, "streaming_avro_evolution", "complete")
+    _run_to_memory(agg, "streaming_avro_evolution", "complete", topic)
     return spark.table("streaming_avro_evolution")
 
 
@@ -6611,19 +6573,12 @@ def q_streaming_avro_tombstone(spark, sf):
         tombstone_col="__deleted",
     )
     state_dir = tempfile.mkdtemp(prefix="avro_tomb_state_")
-    with _stream_partitions(spark):
-        q = (
-            flat.writeStream.outputMode("append")
-            .foreachBatch(
-                keyed_upsert_sink(
-                    state_dir, keys=["user_id"], offset_col="_offset"
-                )
-            )
-            .option("checkpointLocation", f"{state_dir}/_ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_query(
+        flat,
+        keyed_upsert_sink(state_dir, keys=["user_id"], offset_col="_offset"),
+        topic,
+        state_dir,
+    )
     return read_state(spark, state_dir).select(
         "user_id",
         F.col("event_type").alias("latest_event_type"),
@@ -6728,7 +6683,7 @@ def q_streaming_avro_ocf(spark, sf):
         .cast("bigint")
         .alias("sum_value_micro"),
     )
-    _run_to_memory(agg, "streaming_avro_ocf", "complete")
+    _run_to_memory(agg, "streaming_avro_ocf", "complete", lake)
     return spark.table("streaming_avro_ocf")
 
 
@@ -6783,17 +6738,12 @@ def q_streaming_pull_query(spark, sf):
     )
     flat = unwrap_rewrite(envelopes, keep=("_offset",))
     state_dir = tempfile.mkdtemp(prefix="pull_query_state_")
-    with _stream_partitions(spark):
-        q = (
-            flat.writeStream.outputMode("append")
-            .foreachBatch(
-                keyed_upsert_sink(state_dir, keys=["user_id"], offset_col="_offset")
-            )
-            .option("checkpointLocation", f"{state_dir}/_ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_query(
+        flat,
+        keyed_upsert_sink(state_dir, keys=["user_id"], offset_col="_offset"),
+        _events_src(sf),
+        state_dir,
+    )
     return read_state(spark, state_dir).filter(
         F.col("user_id").isin(_PULL_KEYS)
     )
@@ -6845,16 +6795,13 @@ def q_streaming_restart_resume(spark, sf):
             .alias("total_value"),
             F.max("event_id").alias("last_offset"),
         )
-        with _stream_partitions(spark):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        writer = (
+            agg.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("complete")
+            .option("checkpointLocation", ckpt)
+        )
+        start_query(spark, writer, src).awaitTermination()
 
     _one_pass("streaming_restart_pass1")
     slice_b.write.mode("append").parquet(src)
@@ -6892,15 +6839,9 @@ def q_streaming_topn(spark, sf):
         .select("event_id", "user_id", "value", "ts")
     )
     state_dir = tempfile.mkdtemp(prefix="stream_topn_")
-    with _stream_partitions(spark):
-        q = (
-            src.writeStream.outputMode("append")
-            .foreachBatch(topn_sink(state_dir, "value", 20, ["event_id"]))
-            .option("checkpointLocation", f"{state_dir}/_ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_query(
+        src, topn_sink(state_dir, "value", 20, ["event_id"]), _events_src(sf), state_dir
+    )
     return read_state(spark, state_dir)
 
 
@@ -6916,7 +6857,7 @@ def q_streaming_session_window(spark, sf):
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("w.start").alias("session_start"), "user_id", "n_events")
     )
-    _run_to_memory(agg, "streaming_session_window", "complete")
+    _run_to_memory(agg, "streaming_session_window", "complete", _events_src(sf))
     return spark.table("streaming_session_window")
 
 
@@ -6948,8 +6889,7 @@ def q_streaming_materialize_topic(spark, sf):
         )
     )
     base = tempfile.mkdtemp(prefix="topics_")
-    with _stream_partitions(spark):
-        materialize_to_topic(derived, "purchases", base).awaitTermination()
+    materialize_to_topic(derived, "purchases", base, _events_src(sf)).awaitTermination()
     return spark.read.parquet(f"{base}/purchases")
 
 
@@ -7038,7 +6978,7 @@ def q_streaming_static_enrich(spark, sf):
         .join(dim, F.col("user_id") == F.col("c_custkey"), "left")
         .drop("c_custkey")
     )
-    _run_to_memory(out, "streaming_static_enrich", "append")
+    _run_to_memory(out, "streaming_static_enrich", "append", _events_src(sf))
     return spark.table("streaming_static_enrich")
 
 
@@ -7069,11 +7009,11 @@ def q_streaming_minhash_dedup(spark, sf):
 
     base = tempfile.mkdtemp(prefix="stream_dedup_")
     schema = _catalog_table_schema(spark, sf, "documents")
-    sdf = spark.readStream.schema(schema).parquet(f"{sf}/documents.parque[t]")
-    with _stream_partitions(spark):
-        run_minhash_dedup_stream(
-            sdf.select("doc_id", "text"), f"{base}/state", f"{base}/out"
-        )
+    src = f"{sf}/documents.parque[t]"
+    sdf = spark.readStream.schema(schema).parquet(src)
+    run_minhash_dedup_stream(
+        sdf.select("doc_id", "text"), src, f"{base}/state", f"{base}/out"
+    )
     return read_flags(spark, f"{base}/out")
 
 
@@ -7189,11 +7129,11 @@ def q_streaming_embedding_dedup(spark, sf):
 
     base = tempfile.mkdtemp(prefix="stream_embdedup_")
     schema = _catalog_table_schema(spark, sf, "embeddings")
-    sdf = spark.readStream.schema(schema).parquet(f"{sf}/embeddings.parque[t]")
-    with _stream_partitions(spark):
-        run_embdedup_stream(
-            sdf.select("vec_id", "embedding"), f"{base}/state", f"{base}/out"
-        )
+    src = f"{sf}/embeddings.parque[t]"
+    sdf = spark.readStream.schema(schema).parquet(src)
+    run_embdedup_stream(
+        sdf.select("vec_id", "embedding"), src, f"{base}/state", f"{base}/out"
+    )
     return read_embdedup_flags(spark, f"{base}/out")
 
 
@@ -7235,13 +7175,13 @@ def q_streaming_hll(spark, sf):
     )
 
     base = tempfile.mkdtemp(prefix="stream_hll_")
-    with _stream_partitions(spark):
-        run_hll_stream(
-            _events_stream(spark, sf).select("event_type", "event_id"),
-            f"{base}/state",
-            "event_id",
-            ["event_type"],
-        )
+    run_hll_stream(
+        _events_stream(spark, sf).select("event_type", "event_id"),
+        _events_src(sf),
+        f"{base}/state",
+        "event_id",
+        ["event_type"],
+    )
     return read_hll_estimate(spark, f"{base}/state", ["event_type"])
 
 
@@ -7260,14 +7200,14 @@ def q_streaming_ohlc(spark, sf):
     )
 
     base = tempfile.mkdtemp(prefix="stream_ohlc_")
-    with _stream_partitions(spark):
-        run_bars_stream(
-            _events_stream(spark, sf).select(
-                "event_type", "ts", "value", "event_id"
-            ),
-            f"{base}/state",
-            key_cols=["event_type"],
-        )
+    run_bars_stream(
+        _events_stream(spark, sf).select(
+            "event_type", "ts", "value", "event_id"
+        ),
+        _events_src(sf),
+        f"{base}/state",
+        key_cols=["event_type"],
+    )
     return read_bars(spark, f"{base}/state", ["event_type"])
 
 
@@ -7298,13 +7238,13 @@ def q_streaming_stateful_agg(spark, sf):
     )
 
     base = tempfile.mkdtemp(prefix="stream_stateful_")
-    with _stream_partitions(spark):
-        run_stateful_counter(
-            _events_stream(spark, sf).select(
-                "user_id", "event_id", "event_type", "value"
-            ),
-            base,
-        )
+    run_stateful_counter(
+        _events_stream(spark, sf).select(
+            "user_id", "event_id", "event_type", "value"
+        ),
+        _events_src(sf),
+        base,
+    )
     return read_counter(spark, base).select(
         "user_id",
         "n_events",
@@ -7334,12 +7274,12 @@ def q_streaming_gap_fill(spark, sf):
     )
 
     base = tempfile.mkdtemp(prefix="stream_gapfill_")
-    with _stream_partitions(spark):
-        run_bars_stream(
-            _events_stream(spark, sf).select("user_id", "ts", "value", "event_id"),
-            f"{base}/state",
-            key_cols=["user_id"],
-        )
+    run_bars_stream(
+        _events_stream(spark, sf).select("user_id", "ts", "value", "event_id"),
+        _events_src(sf),
+        f"{base}/state",
+        key_cols=["user_id"],
+    )
     daily = read_bars(spark, f"{base}/state", ["user_id"]).select(
         "user_id", F.col("bucket_ts").alias("day"), F.col("close").alias("obs_value")
     )
@@ -7363,12 +7303,12 @@ def q_streaming_cms(spark, sf):
     )
 
     base = tempfile.mkdtemp(prefix="stream_cms_")
-    with _stream_partitions(spark):
-        run_cms_stream(
-            _events_stream(spark, sf).select("user_id"),
-            f"{base}/state",
-            "user_id",
-        )
+    run_cms_stream(
+        _events_stream(spark, sf).select("user_id"),
+        _events_src(sf),
+        f"{base}/state",
+        "user_id",
+    )
     candidates = _events(spark, sf).select("user_id").distinct()
     return read_cms_topk(spark, f"{base}/state", candidates, "user_id")
 
@@ -7387,7 +7327,7 @@ def q_streaming_dropdup(spark, sf):
     ev1 = _events_stream(spark, sf).select("event_id", "user_id", "event_type")
     ev2 = _events_stream(spark, sf).select("event_id", "user_id", "event_type")
     deduped = ev1.unionByName(ev2).dropDuplicates(["event_id"])
-    _run_to_memory(deduped, "streaming_dropdup", "append")
+    _run_to_memory(deduped, "streaming_dropdup", "append", _events_src(sf))
     return spark.table("streaming_dropdup")
 
 
@@ -7416,7 +7356,7 @@ def q_streaming_dropdup_watermarked(spark, sf):
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "user_id", "event_type")
     )
-    _run_to_memory(deduped, "streaming_dropdup_wm", "append")
+    _run_to_memory(deduped, "streaming_dropdup_wm", "append", _events_src(sf))
     return spark.table("streaming_dropdup_wm")
 
 
@@ -7447,7 +7387,7 @@ def q_streaming_sessionize(spark, sf):
 
     ev = _events_stream(spark, sf).select("user_id", "ts")
     out = sessionize_stream(ev)
-    _run_to_memory(out, "streaming_sessionize", "update")
+    _run_to_memory(out, "streaming_sessionize", "update", _events_src(sf))
     return spark.table("streaming_sessionize")
 
 
@@ -8405,9 +8345,9 @@ def _dup_ngram_coverage_frame(d: DataFrame, form: str = "auto") -> DataFrame:
     stages, and the aggregate feeding the df side breaks the pattern —
     measured 1.3x SLOWER than the window with the skew intact.)
     Measured on the planted boilerplate corpus (half of 8M docs = one
-    gram; tools/dup_ngram_skew_ab.py, same session, min-of-3): the
-    window form funnels 4M rows through one task while this form
-    spreads them — numbers in SCALING.md (round 10)."""
+    gram; tools/dup_ngram_skew_ab.py as of b00a344, same session,
+    min-of-3): the window form funnels 4M rows through one task while
+    this form spreads them — numbers in SCALING.md (round 10)."""
     occ = _dup_ngram_occ(d)
     if form == "auto":
         bytes_ = _scan_bytes(d)
@@ -8570,11 +8510,11 @@ def q_streaming_bm25(spark, sf):
 
     base = tempfile.mkdtemp(prefix="stream_bm25_")
     schema = _catalog_table_schema(spark, sf, "documents")
-    sdf = spark.readStream.schema(schema).parquet(f"{sf}/documents.parque[t]")
-    with _stream_partitions(spark):
-        run_index_stream(
-            sdf.select("doc_id", "text"), f"{base}/state", _BM25_TERMS
-        )
+    src = f"{sf}/documents.parque[t]"
+    sdf = spark.readStream.schema(schema).parquet(src)
+    run_index_stream(
+        sdf.select("doc_id", "text"), src, f"{base}/state", _BM25_TERMS
+    )
     return read_bm25_topk(spark, f"{base}/state")
 
 
@@ -9192,13 +9132,13 @@ def q_streaming_quantile_sketch(spark, sf):
     )
 
     base = tempfile.mkdtemp(prefix="stream_hist_")
-    with _stream_partitions(spark):
-        run_hist_stream(
-            _events_stream(spark, sf).select("event_type", "value"),
-            f"{base}/state",
-            "value",
-            ["event_type"],
-        )
+    run_hist_stream(
+        _events_stream(spark, sf).select("event_type", "value"),
+        _events_src(sf),
+        f"{base}/state",
+        "value",
+        ["event_type"],
+    )
     return read_hist_quantiles(spark, f"{base}/state", ["event_type"])
 
 
@@ -9607,8 +9547,7 @@ def q_streaming_cohort_matrix(spark, sf):
 
     base = tempfile.mkdtemp(prefix="stream_cohort_")
     sdf = _events_stream(spark, sf).select("user_id", "ts")
-    with _stream_partitions(spark):
-        run_cohort_stream(sdf, f"{base}/state")
+    run_cohort_stream(sdf, _events_src(sf), f"{base}/state")
     return read_cohort_matrix(spark, f"{base}/state")
 
 
@@ -9634,8 +9573,7 @@ def q_streaming_ltv_curve(spark, sf):
     sdf = _events_stream(spark, sf).select(
         "user_id", "ts", "event_type", "value"
     )
-    with _stream_partitions(spark):
-        run_ltv_stream(sdf, f"{base}/state")
+    run_ltv_stream(sdf, _events_src(sf), f"{base}/state")
     return read_ltv_curve(spark, f"{base}/state")
 
 
@@ -9857,15 +9795,7 @@ def q_streaming_late_drop(spark, sf):
             deleted_col=None,
         )
 
-    with _stream_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("update")
-            .foreachBatch(_sink)
-            .option("checkpointLocation", f"{base}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_query(agg, _sink, src, base)
     return read_state(spark, state).select("window_start", "event_type", "n")
 
 
@@ -11009,12 +10939,12 @@ def q_streaming_psi_drift(spark, sf):
         .collect()
     )
     base = tempfile.mkdtemp(prefix="stream_psi_")
-    with _stream_partitions(spark):
-        run_drift_stream(
-            _events_stream(spark, sf).select("event_type", "ts", "value"),
-            f"{base}/state",
-            b.m,
-        )
+    run_drift_stream(
+        _events_stream(spark, sf).select("event_type", "ts", "value"),
+        _events_src(sf),
+        f"{base}/state",
+        b.m,
+    )
     return read_psi(spark, f"{base}/state")
 
 
@@ -11064,14 +10994,15 @@ def q_streaming_weighted_sample(spark, sf):
 
     schema = load(spark, sf, "orders").schema
     base = tempfile.mkdtemp(prefix="stream_resv_")
-    with _stream_partitions(spark):
-        run_reservoir_stream(
-            file_stream(spark, f"{sf}/orders.parque[t]", schema),
-            f"{base}/state",
-            weight_col="o_totalprice",
-            k=100,
-            id_col="o_orderkey",
-        )
+    src = f"{sf}/orders.parque[t]"
+    run_reservoir_stream(
+        file_stream(spark, src, schema),
+        src,
+        f"{base}/state",
+        weight_col="o_totalprice",
+        k=100,
+        id_col="o_orderkey",
+    )
     return read_reservoir(spark, f"{base}/state").select(
         "o_orderkey", "o_totalprice", "samp_key"
     )
@@ -11096,13 +11027,13 @@ def q_streaming_event_transitions(spark, sf):
     )
 
     base = tempfile.mkdtemp(prefix="stream_trans_")
-    with _stream_partitions(spark):
-        run_transitions_stream(
-            _events_stream(spark, sf).select(
-                "user_id", "event_type", "ts", "event_id"
-            ),
-            f"{base}/state",
-        )
+    run_transitions_stream(
+        _events_stream(spark, sf).select(
+            "user_id", "event_type", "ts", "event_id"
+        ),
+        _events_src(sf),
+        f"{base}/state",
+    )
     return read_transitions(spark, f"{base}/state")
 
 
@@ -11123,11 +11054,11 @@ def q_streaming_interarrival(spark, sf):
     )
 
     base = tempfile.mkdtemp(prefix="stream_gap_")
-    with _stream_partitions(spark):
-        run_interarrival_stream(
-            _events_stream(spark, sf).select("user_id", "ts", "event_id"),
-            f"{base}/state",
-        )
+    run_interarrival_stream(
+        _events_stream(spark, sf).select("user_id", "ts", "event_id"),
+        _events_src(sf),
+        f"{base}/state",
+    )
     return read_interarrival(spark, f"{base}/state")
 
 
@@ -11707,11 +11638,11 @@ def q_streaming_out_of_order(spark, sf):
     )
 
     base = tempfile.mkdtemp(prefix="stream_ooo_")
-    with _stream_partitions(spark):
-        run_disorder_stream(
-            _events_stream(spark, sf).select("event_type", "ts", "event_id"),
-            f"{base}/state",
-        )
+    run_disorder_stream(
+        _events_stream(spark, sf).select("event_type", "ts", "event_id"),
+        _events_src(sf),
+        f"{base}/state",
+    )
     return read_disorder(spark, f"{base}/state")
 
 
@@ -11989,13 +11920,13 @@ def q_streaming_scd2(spark, sf):
     )
 
     base = tempfile.mkdtemp(prefix="stream_scd2_")
-    with _stream_partitions(spark):
-        run_scd2_stream(
-            _events_stream(spark, sf)
-            .filter(F.col("event_type") == "purchase")
-            .select("user_id", "event_id", "value", "ts"),
-            f"{base}/state",
-        )
+    run_scd2_stream(
+        _events_stream(spark, sf)
+        .filter(F.col("event_type") == "purchase")
+        .select("user_id", "event_id", "value", "ts"),
+        _events_src(sf),
+        f"{base}/state",
+    )
     return read_scd2(spark, f"{base}/state")
 
 
@@ -12016,11 +11947,11 @@ def q_streaming_funnel(spark, sf):
     )
 
     base = tempfile.mkdtemp(prefix="stream_funnel_")
-    with _stream_partitions(spark):
-        run_funnel_stream(
-            _events_stream(spark, sf).select("user_id", "event_type", "ts"),
-            f"{base}/state",
-        )
+    run_funnel_stream(
+        _events_stream(spark, sf).select("user_id", "event_type", "ts"),
+        _events_src(sf),
+        f"{base}/state",
+    )
     return read_funnel(spark, f"{base}/state")
 
 
@@ -12273,13 +12204,14 @@ def q_streaming_temperature_mixture(spark, sf):
 
     schema = load(spark, sf, "documents").schema
     base = tempfile.mkdtemp(prefix="stream_mix_")
-    with _stream_partitions(spark):
-        run_mixture_stream(
-            file_stream(spark, f"{sf}/documents.parque[t]", schema).select(
-                "doc_id", "source"
-            ),
-            f"{base}/state",
-        )
+    src = f"{sf}/documents.parque[t]"
+    run_mixture_stream(
+        file_stream(spark, src, schema).select(
+            "doc_id", "source"
+        ),
+        src,
+        f"{base}/state",
+    )
     return read_mixture(spark, f"{base}/state", budget=float(_TEMP_BUDGET))
 
 
@@ -12699,14 +12631,14 @@ def q_streaming_ewma(spark, sf):
     )
 
     base = tempfile.mkdtemp(prefix="stream_ewma_")
-    with _stream_partitions(spark):
-        run_ewma_stream(
-            _events_stream(spark, sf).select(
-                "event_type", "ts", "value", "event_id"
-            ),
-            f"{base}/state",
-            key_cols=["event_type"],
-        )
+    run_ewma_stream(
+        _events_stream(spark, sf).select(
+            "event_type", "ts", "value", "event_id"
+        ),
+        _events_src(sf),
+        f"{base}/state",
+        key_cols=["event_type"],
+    )
     return read_ewma(spark, f"{base}/state", ["event_type"])
 
 

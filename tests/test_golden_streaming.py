@@ -23,6 +23,9 @@ from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming import 
 from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.pipeline import (
     run_flagship_stream,
 )
+from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming.sources import (
+    source_bytes,
+)
 
 from fixtures import (
     CUSTOMERS_COLS,
@@ -66,11 +69,15 @@ def _caller_confs(spark) -> dict:
     return {k: confs.get(k) for k in _CALLER_CONFS}
 
 
-def _checkpoint_width(work: str, query: str) -> int:
+def _checkpoint_width(ckpt: str) -> int:
     """The shuffle-partition count a query's checkpoint fixed at its
     first batch (offset log: a version line, then the batch metadata)."""
-    with open(os.path.join(work, "checkpoints", query, "offsets", "0")) as fh:
+    with open(os.path.join(ckpt, "offsets", "0")) as fh:
         return int(json.loads(fh.readlines()[1])["conf"][_SHUFFLE])
+
+
+def _flagship_width(work: str, query: str) -> int:
+    return _checkpoint_width(os.path.join(work, "checkpoints", query))
 
 
 def test_streaming_golden_incremental(spark, tmp_path):
@@ -88,8 +95,8 @@ def test_streaming_golden_incremental(spark, tmp_path):
     assert _caller_confs(spark) == caller
     # a few hundred bytes of input -> one state-store partition per
     # query, whatever the caller's own shuffle width
-    assert _checkpoint_width(work, "customers") == 1
-    assert _checkpoint_width(work, "shipped") == 1
+    assert _flagship_width(work, "customers") == 1
+    assert _flagship_width(work, "shipped") == 1
 
     # round 2: the D6 increment arrives; same checkpoints -> only the new
     # files are processed, and the state tables revise incrementally.
@@ -105,7 +112,7 @@ def test_streaming_golden_incremental(spark, tmp_path):
     finally:
         spark.conf.set(_SHUFFLE, caller[_SHUFFLE])
     assert _collect_golden(out2) == GOLDEN_SEED | {GOLDEN_INCREMENT_ROW}
-    assert _checkpoint_width(work, "shipped") == 1
+    assert _flagship_width(work, "shipped") == 1
     # the restarted round's foreachBatch merge ran at width 1 too: one
     # output file, not one per caller shuffle partition
     assert len(out2.inputFiles()) == 1
@@ -120,6 +127,233 @@ def test_input_width_one_split_per_partition_capped_at_parallelism(spark):
         assert input_width(spark, 1025) == 2
         assert input_width(spark, 1024 * cap) == cap
         assert input_width(spark, 10**12) == cap
+
+
+def test_source_bytes_sizes_directories_files_and_globs(tmp_path):
+    """A stream's source may be a directory, a single file or a glob
+    such as ``events.parque[t]``; each is sized by the bytes it names."""
+    (tmp_path / "topic" / "sub").mkdir(parents=True)
+    (tmp_path / "topic" / "a.parquet").write_bytes(b"x" * 100)
+    (tmp_path / "topic" / "sub" / "b").write_bytes(b"x" * 50)
+    (tmp_path / "events.parquet").write_bytes(b"x" * 300)
+    assert source_bytes(str(tmp_path / "topic")) == 150
+    assert source_bytes(str(tmp_path / "events.parquet")) == 300
+    assert source_bytes(str(tmp_path / "events.parque[t]")) == 300
+    assert source_bytes([str(tmp_path / "topic"), str(tmp_path / "events.parque[t]")]) == 450
+    assert source_bytes(str(tmp_path / "missing.parque[t]")) == 0
+
+
+_EVENTS = "user_id bigint, event_id bigint, event_type string, value double, ts timestamp"
+
+
+def _write_events(spark, src: str) -> None:
+    """Three parquet files of events in ``src``, in event-id order, with
+    mtimes in that order (the file source's arrival order)."""
+    import datetime
+    import glob
+    import shutil
+    import time
+
+    os.makedirs(src)
+    t0 = datetime.datetime(2024, 1, 1)
+    for f in range(3):
+        rows = [
+            (
+                i % 5,
+                i,
+                ("view", "click", "purchase")[i % 3],
+                None if i % 17 == 0 else float(i % 11),
+                t0 + datetime.timedelta(hours=i),
+            )
+            for i in range(f * 100, (f + 1) * 100)
+        ]
+        tmp = f"{src}_tmp{f}"
+        spark.createDataFrame(rows, _EVENTS).coalesce(1).write.parquet(tmp)
+        dst = os.path.join(src, f"part{f}.parquet")
+        shutil.copy(glob.glob(f"{tmp}/part-*.parquet")[0], dst)
+        mtime = time.time() - 100 + f
+        os.utime(dst, (mtime, mtime))
+
+
+def _hll_case(spark, stream, src, work):
+    from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming import sketches
+
+    def run(state, batch=None):
+        if batch is None:
+            sketches.run_hll_stream(stream, src, state, "event_id", ["event_type"])
+        else:
+            sketches.merge_hll_batch(batch, state, "event_id", ["event_type"])
+        return sketches.read_hll_estimate(spark, state, ["event_type"])
+
+    return run
+
+
+def _cms_case(spark, stream, src, work):
+    from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming import sketches
+
+    def run(state, batch=None):
+        if batch is None:
+            sketches.run_cms_stream(stream, src, state, "user_id")
+        else:
+            sketches.merge_cms_batch(batch, state, "user_id", 0)
+        return upsert.read_state(spark, state)
+
+    return run
+
+
+def _bars_case(spark, stream, src, work):
+    from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming import bars
+
+    def run(state, batch=None):
+        if batch is None:
+            bars.run_bars_stream(stream, src, state, ["event_type"])
+        else:
+            bars.merge_bars_batch(
+                batch, state, ["event_type"], "ts", "value", "event_id", "day", 0
+            )
+        return bars.read_bars(spark, state, ["event_type"])
+
+    return run
+
+
+def _scd2_case(spark, stream, src, work):
+    from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming import scd2
+
+    def run(state, batch=None):
+        if batch is None:
+            scd2.run_scd2_stream(stream, src, state)
+        else:
+            scd2.merge_scd2_batch(batch, state, 0)
+        return scd2.read_scd2(spark, state)
+
+    return run
+
+
+def _memory_case(spark, stream, src, work):
+    """The registry's memory-sink entry shape; its checkpoint lands under
+    the session's default checkpoint root, set by the test."""
+    from pyspark.sql import functions as F
+
+    import __spark_entry__ as entry
+
+    def agg(df):
+        return df.groupBy("event_type").agg(
+            F.count(F.lit(1)).alias("n"), F.max("event_id").alias("last_offset")
+        )
+
+    def run(state, batch=None):
+        if batch is not None:
+            return agg(batch)
+        entry._run_to_memory(agg(stream), "width_rule_memory", "complete", src)
+        return spark.table("width_rule_memory")
+
+    return run
+
+
+def _stateful_case(spark, stream, src, work):
+    from pyspark.sql import functions as F
+
+    from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming import stateful
+
+    def run(state, batch=None):
+        if batch is None:
+            stateful.run_stateful_counter(stream, src, state)
+            return stateful.read_counter(spark, state).select(
+                "user_id", "n_events", "total_cents", "latest_event_type",
+                "latest_value", "last_offset",
+            )
+        return batch.groupBy("user_id").agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("total_cents"),
+            F.max_by("event_type", "event_id").alias("latest_event_type"),
+            F.max_by("value", "event_id").alias("latest_value"),
+            F.max("event_id").alias("last_offset"),
+        )
+
+    return run
+
+
+@pytest.mark.parametrize(
+    "case, ckpt",
+    [
+        (_hll_case, "_ckpt"),
+        (_cms_case, "_ckpt"),
+        (_bars_case, "_ckpt"),
+        (_scd2_case, "_ckpt"),
+        (_memory_case, os.path.join("..", "ckroot", "width_rule_memory")),
+        (_stateful_case, "_ckpt"),
+    ],
+    ids=["hll", "cms", "bars", "scd2", "memory_entry", "stateful_counter"],
+)
+def test_streaming_query_width_follows_its_input(spark, tmp_path, case, ckpt):
+    """Each streaming query starts at ``input_width`` of its source
+    bytes, whatever the caller's width, leaves the caller's confs as it
+    found them, and ends with the state one batch over the same rows
+    gives.  A split size of a third of the input makes the width 3."""
+    from collections import Counter
+
+    src = str(tmp_path / "src")
+    _write_events(spark, src)
+    nbytes = source_bytes(src)
+    stream = (
+        spark.readStream.schema(_EVENTS).option("maxFilesPerTrigger", "1").parquet(src)
+    )
+    run = case(spark, stream, src, str(tmp_path))
+    state = str(tmp_path / "state")
+    scoped = {
+        "spark.sql.files.maxPartitionBytes": str(-(-nbytes // 3)),
+        "spark.sql.streaming.checkpointLocation": str(tmp_path / "ckroot"),
+    }
+    with start_confs(spark, scoped):
+        want = input_width(spark, nbytes)
+        caller = _caller_confs(spark)
+        got = Counter(tuple(r) for r in run(state).collect())
+        assert _caller_confs(spark) == caller
+    assert 1 < want != int(caller[_SHUFFLE])
+    assert _checkpoint_width(os.path.normpath(os.path.join(state, ckpt))) == want
+    batch = spark.read.schema(_EVENTS).parquet(src)
+    assert got == Counter(tuple(r) for r in run(str(tmp_path / "seq"), batch).collect())
+
+
+def test_two_streaming_entries_run_concurrently_on_one_session(spark, tmp_path):
+    """Two registry entries started together on two threads return the
+    rows each returns alone, and the session's confs are the caller's
+    again afterwards."""
+    import threading
+    from collections import Counter
+
+    import __spark_entry__ as entry
+
+    sf = str(tmp_path / "sf")
+    _write_events(spark, os.path.join(sf, "events.parquet"))
+    fns = entry.queries()
+    names = ["streaming_hll", "streaming_windowed_agg"]
+
+    def rows(name):
+        return Counter(tuple(r) for r in fns[name](spark, sf).collect())
+
+    caller = _caller_confs(spark)
+    want = {name: rows(name) for name in names}
+    assert all(want.values())
+    got, errors = {}, []
+    together = threading.Barrier(len(names), timeout=120)
+
+    def run(name):
+        try:
+            together.wait()
+            got[name] = rows(name)
+        except Exception as exc:  # noqa: BLE001 - reported below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=run, args=(name,)) for name in names]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert got == want
+    assert _caller_confs(spark) == caller
 
 
 def test_start_confs_scopes_per_thread_and_restores(spark):
@@ -245,7 +479,7 @@ def test_streaming_failed_customers_round_commits_nothing_and_resumes(
     monkeypatch.undo()
 
     # q2's start() raises: q1 is not left running, nothing is committed
-    real_start = pipeline._start
+    real_start = pipeline.start_query
     starts = []
 
     def failing_second_start(*args, **kwargs):
@@ -254,7 +488,7 @@ def test_streaming_failed_customers_round_commits_nothing_and_resumes(
             raise RuntimeError("injected start fault")
         return real_start(*args, **kwargs)
 
-    monkeypatch.setattr(pipeline, "_start", failing_second_start)
+    monkeypatch.setattr(pipeline, "start_query", failing_second_start)
     with pytest.raises(RuntimeError, match="injected start fault"):
         run_flagship_stream(spark, src, work)
     assert upsert._state_version(shipped) == version
@@ -374,7 +608,10 @@ def test_streaming_dedup_batch_split_invariant(spark, tmp_path):
     _write("src_all", batch2, "b.jsonl")
     s_all = spark.readStream.schema(schema).json(str(tmp_path / "src_all"))
     run_minhash_dedup_stream(
-        s_all, str(tmp_path / "st_all"), str(tmp_path / "out_all")
+        s_all,
+        str(tmp_path / "src_all"),
+        str(tmp_path / "st_all"),
+        str(tmp_path / "out_all"),
     )
     flags_all = {
         (r["doc_id"], r["dup_of"])
@@ -385,12 +622,18 @@ def test_streaming_dedup_batch_split_invariant(spark, tmp_path):
     _write("src_split", batch1, "a.jsonl")
     s1 = spark.readStream.schema(schema).json(str(tmp_path / "src_split"))
     run_minhash_dedup_stream(
-        s1, str(tmp_path / "st_split"), str(tmp_path / "out_split")
+        s1,
+        str(tmp_path / "src_split"),
+        str(tmp_path / "st_split"),
+        str(tmp_path / "out_split"),
     )
     _write("src_split", batch2, "b.jsonl")
     s2 = spark.readStream.schema(schema).json(str(tmp_path / "src_split"))
     run_minhash_dedup_stream(
-        s2, str(tmp_path / "st_split"), str(tmp_path / "out_split")
+        s2,
+        str(tmp_path / "src_split"),
+        str(tmp_path / "st_split"),
+        str(tmp_path / "out_split"),
     )
     flags_split = {
         (r["doc_id"], r["dup_of"])
@@ -509,7 +752,7 @@ def test_streaming_transitions_bridge_batch_boundaries(spark, tmp_path):
         .parquet(str(src))
     )
     state = str(tmp_path / "state")
-    run_transitions_stream(stream, state)
+    run_transitions_stream(stream, str(src), state)
 
     out = {(r.from_type, r.to_type): (r.n, r.p)
            for r in read_transitions(spark, state).collect()}
@@ -788,11 +1031,10 @@ def test_streaming_embdedup_batch_split_invariant(spark, tmp_path):
         ).parquet(str(path / fname))
 
     def _flags(src_dir, tag):
-        s = spark.readStream.schema(schema).parquet(
-            str(tmp_path / src_dir) + "/*"
-        )
+        src = str(tmp_path / src_dir) + "/*"
+        s = spark.readStream.schema(schema).parquet(src)
         run_embdedup_stream(
-            s, str(tmp_path / f"st_{tag}"), str(tmp_path / f"out_{tag}")
+            s, src, str(tmp_path / f"st_{tag}"), str(tmp_path / f"out_{tag}")
         )
         return {
             (r.vec_id, r.dup_of)
@@ -808,14 +1050,15 @@ def test_streaming_embdedup_batch_split_invariant(spark, tmp_path):
 
     # two rounds against the same state/checkpoints
     _write("src_split", batch1, "a")
-    s1 = spark.readStream.schema(schema).parquet(str(tmp_path / "src_split") + "/*")
+    src_split = str(tmp_path / "src_split") + "/*"
+    s1 = spark.readStream.schema(schema).parquet(src_split)
     run_embdedup_stream(
-        s1, str(tmp_path / "st_split"), str(tmp_path / "out_split")
+        s1, src_split, str(tmp_path / "st_split"), str(tmp_path / "out_split")
     )
     _write("src_split", batch2, "b")
-    s2 = spark.readStream.schema(schema).parquet(str(tmp_path / "src_split") + "/*")
+    s2 = spark.readStream.schema(schema).parquet(src_split)
     run_embdedup_stream(
-        s2, str(tmp_path / "st_split"), str(tmp_path / "out_split")
+        s2, src_split, str(tmp_path / "st_split"), str(tmp_path / "out_split")
     )
     flags_split = {
         (r.vec_id, r.dup_of)

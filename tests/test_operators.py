@@ -281,6 +281,54 @@ def test_state_table_format_lives_in_upsert_only():
     assert offenders == []
 
 
+def test_streaming_queries_start_in_one_place():
+    """Every streaming query starts through streaming/sources.py's
+    ``start_query``: no other module of the package, nor
+    __spark_entry__.py, sets a trigger or makes a zero-argument
+    ``.start()`` call (the package starts no threads), and only
+    session.py sets ``shuffle.partitions`` or ``noDataMicroBatches`` on
+    a session (confs scoped to one start go through
+    ``session.start_confs``).  The graph batch loops are exempt by name:
+    their per-loop conf toggles are still open work."""
+    import ast
+
+    import trainee_scala_module_8_kafka_streaming_etl_pipeline_spark as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    paths = [os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs if f.endswith(".py")]
+    paths.append(os.path.join(os.path.dirname(root), "__spark_entry__.py"))
+    helper = os.path.join("streaming", "sources.py")
+    watched = {"spark.sql.shuffle.partitions", "spark.sql.streaming.noDataMicroBatches.enabled"}
+    loop_exempt = {
+        (os.path.join("operators", "graph.py"), "pagerank_fixed"),
+        (os.path.join("operators", "graph.py"), "kcore_peel"),
+    }
+    starts, conf_sets, in_helper = [], [], []
+    for path in paths:
+        rel = os.path.relpath(path, root)
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        for top in tree.body:
+            for node in ast.walk(top):
+                if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+                    continue
+                where = f"{rel}:{node.lineno}"
+                attr = node.func.attr
+                if attr == "trigger" or (attr == "start" and not node.args and not node.keywords):
+                    (in_helper if rel == helper else starts).append(where)
+                key = node.args[0].value if node.args and isinstance(node.args[0], ast.Constant) else None
+                if (
+                    attr in ("set", "unset")
+                    and key in watched
+                    and rel != "session.py"
+                    and (rel, getattr(top, "name", None)) not in loop_exempt
+                ):
+                    conf_sets.append(where)
+    assert starts == []
+    assert conf_sets == []
+    assert len(in_helper) == 2  # one trigger(availableNow=True), one start()
+
+
 def test_upsert_schema_evolution_widen(spark, tmp_path):
     """CDC widen: a mid-stream ALTER TABLE ADD COLUMN grows the envelope.
     With allow_schema_evolution the merge unions by name — untouched
@@ -1447,6 +1495,31 @@ def test_kmeans_gemm_zero_norm_and_empty_centroids(spark):
         emb2, n_iters=1, centroid_stride=100
     )
     assert assigned2.count() == 0
+
+
+@pytest.mark.parametrize("id_type", ["int", "string"])
+def test_kmeans_fixed_keeps_the_id_column_type(spark, id_type):
+    """The GEMM assignment takes the id column's type (and so the
+    cluster ids', which are stride centroids' ids) from its input, and
+    assigns the same clusters as with a bigint id."""
+    from pyspark.sql import functions as F
+
+    from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.operators import (
+        similarity,
+    )
+
+    rows = [
+        (i, [1.0, 0.01 * i, 0.0] if i % 2 == 0 else [0.01 * i, 1.0, 0.0])
+        for i in range(10)
+    ]
+    base = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    emb = base.withColumn("vec_id", F.col("vec_id").cast(id_type))
+    want, _ = similarity.kmeans_fixed(base, n_iters=2, centroid_stride=5)
+    got, _ = similarity.kmeans_fixed(emb, n_iters=2, centroid_stride=5)
+    assert dict(got.dtypes) == {"vec_id": id_type, "cluster_id": id_type}
+    assert sorted((str(r.vec_id), str(r.cluster_id)) for r in got.collect()) == sorted(
+        (str(r.vec_id), str(r.cluster_id)) for r in want.collect()
+    )
 
 
 def test_rrf_fuse_matches_full_outer_formula(spark):

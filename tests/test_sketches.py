@@ -64,7 +64,7 @@ def test_streaming_hll_two_rounds_match_batch(spark, tmp_path):
             for r in rows:
                 fh.write(json.dumps(r) + "\n")
         sdf = spark.readStream.schema(schema).json(str(src))
-        run_hll_stream(sdf, str(tmp_path / "state"), "k", ["g"])
+        run_hll_stream(sdf, str(src), str(tmp_path / "state"), "k", ["g"])
 
     _ingest(rows1, "r1.jsonl")
     _ingest(rows2, "r2.jsonl")
@@ -130,7 +130,7 @@ def test_streaming_bars_two_rounds_match_batch(spark, tmp_path):
             .withColumn("ts", F.to_timestamp("ts"))
         )
         run_bars_stream(
-            sdf, str(tmp_path / "state"), ["k"], "ts", "v", "id", "day"
+            sdf, str(src), str(tmp_path / "state"), ["k"], "ts", "v", "id", "day"
         )
 
     _ingest(rows1, "r1.jsonl")
@@ -179,7 +179,7 @@ def test_streaming_hist_two_rounds_match_batch(spark, tmp_path):
             for r in rows:
                 fh.write(json.dumps(r) + "\n")
         sdf = spark.readStream.schema(schema).json(str(src))
-        run_hist_stream(sdf, str(tmp_path / "state"), "v", ["g"])
+        run_hist_stream(sdf, str(src), str(tmp_path / "state"), "v", ["g"])
 
     _ingest(rows1, "r1.jsonl")
     _ingest(rows2, "r2.jsonl")

@@ -28,8 +28,8 @@ from pyspark.sql import functions as F
 # session's configured shuffle parallelism it returns None (small
 # graphs keep the session plan untouched — AQE still coalesces); above
 # it, the stage exchanges are pinned to ceil(rows / _EDGES_PER_TASK).
-# Automatic A/B at sf~10 (tools/graph_sizing_ab.py, same session,
-# min-of-3): triangle_count 306.4 -> 198.5 s (0.648x).  The same
+# Automatic A/B at sf~10 (tools/graph_sizing_ab.py as of b00a344, same
+# session, min-of-3): triangle_count 306.4 -> 198.5 s (0.648x).  The same
 # widening was measured on kcore_peel's exchanges and REJECTED (1.16x
 # slower — see its docstring); the lever is wedge-only.
 _EDGES_PER_TASK = 1_000_000
@@ -403,7 +403,7 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     wedge stage (see :func:`wedge_partitions`) was A/B-tested here —
     240 partitions for the sf~10 240M-row symmetric edge list vs the
     session's 32 — and measured 1.16x SLOWER (37.0 -> 43.0 s,
-    tools/graph_sizing_ab.py, same session, min-of-3).  The peel's
+    tools/graph_sizing_ab.py as of b00a344, same session, min-of-3).  The peel's
     per-task state is bare (n, m) pairs with no adjacency arrays
     (~120 MB/task at session width — no spill), so extra width buys
     nothing and the shrinking rounds pay pure scheduler overhead on

@@ -685,6 +685,8 @@ def _kmeans_assign_gemm(
     import numpy as np
 
     vec_type = emb.schema[vec_col].dataType.simpleString()
+    # cluster ids are the stride centroids' ids, so both take the id type
+    id_type = emb.schema[id_col].dataType.simpleString()
     # A NULL cluster_id centroid can exist after a round whose vectors
     # were all unassignable (the zero-norm degenerate family): sort it
     # LAST so it only wins a strictly higher cosine, mirroring
@@ -728,7 +730,8 @@ def _kmeans_assign_gemm(
             )
 
     return emb.select(id_col, vec_col).mapInPandas(
-        _batches, schema=f"{id_col} long, {vec_col} {vec_type}, cluster_id long"
+        _batches,
+        schema=f"{id_col} {id_type}, {vec_col} {vec_type}, cluster_id {id_type}",
     )
 
 

@@ -21,13 +21,13 @@ time-series rollup.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.timeseries import ohlc_bars
+from .sources import run_query
 from .upsert import read_state, write_version
 
 
@@ -82,6 +82,7 @@ def merge_bars_batch(
 
 def run_bars_stream(
     stream_df: DataFrame,
+    sources: str | Sequence[str],
     state_dir: str,
     key_cols: Sequence[str],
     ts_col: str = "ts",
@@ -97,13 +98,7 @@ def run_bars_stream(
             bucket, batch_id,
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", os.path.join(state_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_query(stream_df, _sink, sources, state_dir)
 
 
 def read_bars(spark: SparkSession, state_dir: str, key_cols: Sequence[str]) -> DataFrame:

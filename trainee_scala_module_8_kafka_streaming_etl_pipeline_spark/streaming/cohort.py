@@ -28,11 +28,12 @@ batch cohort_matrix SQL over the same rows.
 
 from __future__ import annotations
 
-import os
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .sources import run_query
 from .upsert import read_state, write_version
 
 _COLS = ["user_id", "wk", "kind"]
@@ -72,16 +73,12 @@ def merge_cohort_batch(batch_df: DataFrame, state_dir: str) -> None:
     write_version(first.unionByName(act), state_dir)
 
 
-def run_cohort_stream(stream_df: DataFrame, state_dir: str) -> None:
-    q = (
-        stream_df.writeStream.foreachBatch(
-            lambda b, _i: merge_cohort_batch(b, state_dir)
-        )
-        .option("checkpointLocation", os.path.join(state_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
+def run_cohort_stream(
+    stream_df: DataFrame, sources: str | Sequence[str], state_dir: str
+) -> None:
+    run_query(
+        stream_df, lambda b, _i: merge_cohort_batch(b, state_dir), sources, state_dir
     )
-    q.awaitTermination()
 
 
 # --- LTV curve: min-merge cohorts + ADDITIVE revenue cells ------------------
@@ -152,16 +149,12 @@ def merge_ltv_batch(batch_df: DataFrame, state_dir: str, batch_id: int) -> None:
     write_version(bs.select(*_LTV_COLS), state_dir, version=batch_id)
 
 
-def run_ltv_stream(stream_df: DataFrame, state_dir: str) -> None:
-    q = (
-        stream_df.writeStream.foreachBatch(
-            lambda b, i: merge_ltv_batch(b, state_dir, i)
-        )
-        .option("checkpointLocation", os.path.join(state_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
+def run_ltv_stream(
+    stream_df: DataFrame, sources: str | Sequence[str], state_dir: str
+) -> None:
+    run_query(
+        stream_df, lambda b, i: merge_ltv_batch(b, state_dir, i), sources, state_dir
     )
-    q.awaitTermination()
 
 
 def read_ltv_curve(spark: SparkSession, state_dir: str) -> DataFrame:

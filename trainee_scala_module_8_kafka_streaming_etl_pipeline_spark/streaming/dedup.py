@@ -38,11 +38,13 @@ join is co-located and touches only matching buckets.
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dedup as D
+from .sources import run_query
 from .upsert import read_state, upsert_batch
 
 _OUT_SCHEMA = "doc_id bigint, dup_of bigint, jaccard double"
@@ -157,6 +159,7 @@ def dedup_batch(
 
 def run_minhash_dedup_stream(
     stream_df: DataFrame,
+    sources: str | Sequence[str],
     state_dir: str,
     out_dir: str,
     id_col: str = "doc_id",
@@ -171,13 +174,7 @@ def run_minhash_dedup_stream(
             batch_df, state_dir, out_dir, batch_id, id_col, text_col, threshold
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", os.path.join(state_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_query(stream_df, _sink, sources, state_dir)
 
 
 def read_flags(spark: SparkSession, out_dir: str) -> DataFrame:

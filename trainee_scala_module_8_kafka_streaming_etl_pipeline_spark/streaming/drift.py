@@ -16,12 +16,13 @@ size is O(groups x bins x 2) forever, regardless of stream volume.
 
 from __future__ import annotations
 
-import os
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.profiling import assign_drift_bins, psi_from_counts
+from .sources import run_query
 from .upsert import read_state, write_version
 
 
@@ -51,6 +52,7 @@ def merge_drift_batch(
 
 def run_drift_stream(
     stream_df: DataFrame,
+    sources: str | Sequence[str],
     state_dir: str,
     mid_us: int,
     group_col: str = "event_type",
@@ -68,13 +70,7 @@ def run_drift_stream(
             ts_col, n_bins, bin_width,
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", os.path.join(state_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_query(stream_df, _sink, sources, state_dir)
 
 
 def read_psi(

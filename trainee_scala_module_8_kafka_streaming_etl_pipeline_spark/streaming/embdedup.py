@@ -34,11 +34,13 @@ higher recall), identical to the batch candidate generator.
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import similarity as S
+from .sources import run_query
 from .upsert import read_state, upsert_batch
 
 _OUT_SCHEMA = "vec_id bigint, dup_of bigint, cos double"
@@ -111,6 +113,7 @@ def embdedup_batch(
 
 def run_embdedup_stream(
     stream_df: DataFrame,
+    sources: str | Sequence[str],
     state_dir: str,
     out_dir: str,
     id_col: str = "vec_id",
@@ -122,13 +125,7 @@ def run_embdedup_stream(
             batch_df, state_dir, out_dir, batch_id, id_col, vec_col, threshold
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", os.path.join(state_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_query(stream_df, _sink, sources, state_dir)
 
 
 def read_embdedup_flags(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -18,13 +18,13 @@ qualified to the latest row per key) checks.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.timeseries import ewma
+from .sources import run_query
 from .upsert import read_state, write_version
 
 EWMA_LAGS = 8
@@ -65,23 +65,21 @@ def merge_ewma_batch(
 
 def run_ewma_stream(
     stream_df: DataFrame,
+    sources: str | Sequence[str],
     state_dir: str,
     key_cols: Sequence[str],
     ts_col: str = "ts",
     value_col: str = "value",
     offset_col: str = "event_id",
 ) -> None:
-    q = (
-        stream_df.writeStream.foreachBatch(
-            lambda b, i: merge_ewma_batch(
-                b, state_dir, key_cols, ts_col, value_col, offset_col
-            )
-        )
-        .option("checkpointLocation", os.path.join(state_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    run_query(
+        stream_df,
+        lambda b, i: merge_ewma_batch(
+            b, state_dir, key_cols, ts_col, value_col, offset_col
+        ),
+        sources,
+        state_dir,
     )
-    q.awaitTermination()
 
 
 def read_ewma(

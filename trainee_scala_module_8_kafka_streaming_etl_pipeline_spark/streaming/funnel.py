@@ -25,11 +25,12 @@ but a replayed batch must not see its own output as prior state.
 
 from __future__ import annotations
 
-import os
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .sources import run_query
 from .upsert import read_state, write_version
 
 _STAGES = ("view", "click", "purchase")
@@ -98,16 +99,12 @@ def merge_funnel_batch(
     write_version(out, state_dir, version=batch_id)
 
 
-def run_funnel_stream(stream_df: DataFrame, state_dir: str) -> None:
-    q = (
-        stream_df.writeStream.foreachBatch(
-            lambda b, i: merge_funnel_batch(b, state_dir, i)
-        )
-        .option("checkpointLocation", os.path.join(state_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
+def run_funnel_stream(
+    stream_df: DataFrame, sources: str | Sequence[str], state_dir: str
+) -> None:
+    run_query(
+        stream_df, lambda b, i: merge_funnel_batch(b, state_dir, i), sources, state_dir
     )
-    q.awaitTermination()
 
 
 def read_funnel(spark: SparkSession, state_dir: str) -> DataFrame:

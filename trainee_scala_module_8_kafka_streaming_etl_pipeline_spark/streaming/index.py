@@ -29,13 +29,13 @@ term — this module keeps the standing-query form oracle-checkable.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.retrieval import BM25_B, BM25_K1
+from .sources import run_query
 from .upsert import read_state, write_version
 
 _COLS = ["doc_id", "term", "tf", "dl", "n_docs", "sum_dl"]
@@ -116,17 +116,17 @@ def merge_index_batch(
 
 
 def run_index_stream(
-    stream_df: DataFrame, state_dir: str, query_terms: Sequence[str]
+    stream_df: DataFrame,
+    sources: str | Sequence[str],
+    state_dir: str,
+    query_terms: Sequence[str],
 ) -> None:
-    q = (
-        stream_df.writeStream.foreachBatch(
-            lambda b, i: merge_index_batch(b, state_dir, query_terms, i)
-        )
-        .option("checkpointLocation", os.path.join(state_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    run_query(
+        stream_df,
+        lambda b, i: merge_index_batch(b, state_dir, query_terms, i),
+        sources,
+        state_dir,
     )
-    q.awaitTermination()
 
 
 def read_bm25_topk(

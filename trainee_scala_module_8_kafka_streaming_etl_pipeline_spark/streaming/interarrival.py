@@ -24,11 +24,12 @@ state ∪ batch-partial — no row data to the driver, no sequential scan.
 
 from __future__ import annotations
 
-import os
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .sources import run_query
 from .upsert import read_state, write_version
 
 
@@ -97,16 +98,15 @@ def merge_interarrival_batch(
     write_version(part, state_dir, version=batch_id)
 
 
-def run_interarrival_stream(stream_df: DataFrame, state_dir: str) -> None:
-    q = (
-        stream_df.writeStream.foreachBatch(
-            lambda b, i: merge_interarrival_batch(b, state_dir, i)
-        )
-        .option("checkpointLocation", os.path.join(state_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
+def run_interarrival_stream(
+    stream_df: DataFrame, sources: str | Sequence[str], state_dir: str
+) -> None:
+    run_query(
+        stream_df,
+        lambda b, i: merge_interarrival_batch(b, state_dir, i),
+        sources,
+        state_dir,
     )
-    q.awaitTermination()
 
 
 def read_interarrival(spark: SparkSession, state_dir: str) -> DataFrame:

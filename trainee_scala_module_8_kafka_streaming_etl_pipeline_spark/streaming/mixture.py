@@ -16,12 +16,13 @@ overwrites its own commit instead of double-counting.
 
 from __future__ import annotations
 
-import os
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import sampling
+from .sources import run_query
 from .upsert import read_state, write_version
 
 TEMP_BP = 10000
@@ -48,17 +49,17 @@ def merge_mixture_batch(
 
 
 def run_mixture_stream(
-    stream_df: DataFrame, state_dir: str, id_col: str = "doc_id"
+    stream_df: DataFrame,
+    sources: str | Sequence[str],
+    state_dir: str,
+    id_col: str = "doc_id",
 ) -> None:
-    q = (
-        stream_df.writeStream.foreachBatch(
-            lambda b, i: merge_mixture_batch(b, state_dir, i, id_col)
-        )
-        .option("checkpointLocation", os.path.join(state_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    run_query(
+        stream_df,
+        lambda b, i: merge_mixture_batch(b, state_dir, i, id_col),
+        sources,
+        state_dir,
     )
-    q.awaitTermination()
 
 
 def mixture_from_hist(hist: DataFrame, budget: float = 0.5) -> DataFrame:

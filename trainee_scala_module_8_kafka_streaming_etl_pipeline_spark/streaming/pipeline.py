@@ -43,7 +43,7 @@ from collections.abc import Sequence
 from pyspark.errors import StreamingQueryException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
@@ -54,8 +54,7 @@ from pyspark.sql.types import (
 )
 
 from ..operators.joins import enrich
-from ..session import input_width, start_confs
-from .sources import file_stream
+from .sources import file_stream, start_query
 from .upsert import keyed_upsert_sink, read_state
 
 TS_FMT = "yyyy-MM-dd'T'HH:mm:ss"  # reference timestamp_format (README.md:413-414)
@@ -216,32 +215,6 @@ SHIPMENTS_SCHEMA = StructType(
 )
 
 
-def _dir_bytes(*dirs: str) -> int:
-    return sum(
-        os.path.getsize(os.path.join(root, f))
-        for d in dirs
-        for root, _, files in os.walk(d)
-        for f in files
-    )
-
-
-def _start(
-    spark: SparkSession, writer: DataStreamWriter, src_dirs: Sequence[str]
-) -> StreamingQuery:
-    """Start ``writer`` with ``spark.sql.shuffle.partitions`` =
-    ``input_width`` of the bytes under ``src_dirs``, scoped to the
-    ``start()`` call.
-
-    The width is set on every start: a fresh checkpoint records it as
-    the query's state-store partition count, and on a restart Spark
-    takes that count from the checkpoint for the stateful operators only
-    — the query's other shuffles, its ``foreachBatch`` merges included,
-    run at the session's ``shuffle.partitions``."""
-    width = input_width(spark, _dir_bytes(*src_dirs))
-    with start_confs(spark, {"spark.sql.shuffle.partitions": str(width)}):
-        return writer.start()
-
-
 def _shipped_stream(spark: SparkSession, orders_dir: str, shipments_dir: str) -> DataFrame:
     """Orders x shipments watermarked interval join (J2), the input of
     the flagship's ``shipped_orders`` query."""
@@ -333,8 +306,9 @@ def run_flagship_stream(spark: SparkSession, src_dir: str, work_dir: str) -> Dat
     it.  The call then waits for q2, raises q1's error, and leaves no
     query of its own active.
 
-    State width: each query runs at ``session.input_width`` of the bytes
-    under its source directories, not at the caller's
+    State width: each query starts through ``sources.start_query``, so it
+    runs at ``session.input_width`` of the bytes under its source
+    directories, not at the caller's
     ``spark.sql.shuffle.partitions``.  The width a query's checkpoint is
     created with is its state-store partition count for good: later
     rounds keep it whatever their input, so a pipeline that begins small
@@ -371,15 +345,14 @@ def run_flagship_stream(spark: SparkSession, src_dir: str, work_dir: str) -> Dat
     # --- query 1: customers CDC -> customers_by_key (A2/A3).  A stateless
     # append query: the keyed upsert sink keeps the latest row per key by
     # offset, so the table is materialized once, in the sink.
-    q1 = _start(
+    q1 = start_query(
         spark,
         file_stream(spark, customers_dir, CUSTOMERS_SCHEMA, fmt="json")
         .writeStream.outputMode("append")
         .foreachBatch(
             keyed_upsert_sink(customers_state, keys=["id"], offset_col="_offset")
         )
-        .option("checkpointLocation", os.path.join(ckpt, "customers"))
-        .trigger(availableNow=True),
+        .option("checkpointLocation", os.path.join(ckpt, "customers")),
         [customers_dir],
     )
     queries = [q1]
@@ -389,7 +362,7 @@ def run_flagship_stream(spark: SparkSession, src_dir: str, work_dir: str) -> Dat
         # enrichment (J1) + keyed upsert (S9/E2).  It keeps its trailing
         # no-data batch: that batch commits the final watermark
         # advancement the next round starts from.
-        q2 = _start(
+        q2 = start_query(
             spark,
             _shipped_stream(spark, orders_dir, shipments_dir).writeStream
             .outputMode("append")
@@ -401,8 +374,7 @@ def run_flagship_stream(spark: SparkSession, src_dir: str, work_dir: str) -> Dat
                     transform=_enrich_with_customer_state,
                 )
             )
-            .option("checkpointLocation", os.path.join(ckpt, "shipped"))
-            .trigger(availableNow=True),
+            .option("checkpointLocation", os.path.join(ckpt, "shipped")),
             [orders_dir, shipments_dir],
         )
         queries.append(q2)

@@ -21,12 +21,13 @@ exactly-once depends entirely on the checkpoint.
 
 from __future__ import annotations
 
-import os
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.sampling import es_key
+from .sources import run_query
 from .upsert import read_state, write_version
 
 
@@ -57,6 +58,7 @@ def merge_reservoir_batch(
 
 def run_reservoir_stream(
     stream_df: DataFrame,
+    sources: str | Sequence[str],
     state_dir: str,
     weight_col: str,
     k: int = 100,
@@ -68,13 +70,7 @@ def run_reservoir_stream(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         merge_reservoir_batch(batch_df, state_dir, weight_col, k, id_col)
 
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", os.path.join(state_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_query(stream_df, _sink, sources, state_dir)
 
 
 def read_reservoir(spark: SparkSession, state_dir: str) -> DataFrame:

@@ -20,11 +20,12 @@ deterministically overwrites.
 
 from __future__ import annotations
 
-import os
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .sources import run_query
 from .upsert import read_state, write_version
 
 _COLS = ["user_id", "event_id", "value", "valid_from", "valid_to", "is_current"]
@@ -74,16 +75,12 @@ def merge_scd2_batch(
     )
 
 
-def run_scd2_stream(stream_df: DataFrame, state_dir: str) -> None:
-    q = (
-        stream_df.writeStream.foreachBatch(
-            lambda b, i: merge_scd2_batch(b, state_dir, i)
-        )
-        .option("checkpointLocation", os.path.join(state_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
+def run_scd2_stream(
+    stream_df: DataFrame, sources: str | Sequence[str], state_dir: str
+) -> None:
+    run_query(
+        stream_df, lambda b, i: merge_scd2_batch(b, state_dir, i), sources, state_dir
     )
-    q.awaitTermination()
 
 
 def read_scd2(spark: SparkSession, state_dir: str) -> DataFrame:

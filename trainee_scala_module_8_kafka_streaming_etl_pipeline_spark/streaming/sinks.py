@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from .sources import start_query
+
 
 def topn_sink(
     state_dir: str,
@@ -55,11 +57,12 @@ def materialize_to_topic(
     df: DataFrame,
     name: str,
     base_dir: str,
+    sources: str | Sequence[str],
     checkpoint_dir: str | None = None,
-    available_now: bool = True,
 ) -> StreamingQuery:
-    """Persist a streaming DataFrame as the named append-only output
-    stream (CSAS).  Returns the started query; callers own awaiting."""
+    """Persist a streaming DataFrame, read from ``sources``, as the named
+    append-only output stream (CSAS).  Returns the started query;
+    callers own awaiting."""
     path = os.path.join(base_dir, name)
     ckpt = checkpoint_dir or os.path.join(base_dir, f"_ckpt_{name}")
     writer = (
@@ -69,6 +72,4 @@ def materialize_to_topic(
         .outputMode("append")
         .queryName(name)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_query(df.sparkSession, writer, sources)

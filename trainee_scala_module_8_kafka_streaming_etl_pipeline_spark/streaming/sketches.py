@@ -19,13 +19,13 @@ the batch sketch query over the same rows.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import sketches as SK
+from .sources import run_query
 from .upsert import read_state, write_version
 
 
@@ -48,6 +48,7 @@ def merge_hll_batch(
 
 def run_hll_stream(
     stream_df: DataFrame,
+    sources: str | Sequence[str],
     state_dir: str,
     key_col: str,
     group_cols: Sequence[str] = (),
@@ -59,13 +60,7 @@ def run_hll_stream(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         merge_hll_batch(batch_df, state_dir, key_col, group_cols, m)
 
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", os.path.join(state_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_query(stream_df, _sink, sources, state_dir)
 
 
 def read_hll_estimate(
@@ -103,6 +98,7 @@ def merge_cms_batch(
 
 def run_cms_stream(
     stream_df: DataFrame,
+    sources: str | Sequence[str],
     state_dir: str,
     key_col: str,
     d: int = SK.CMS_D,
@@ -113,13 +109,7 @@ def run_cms_stream(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         merge_cms_batch(batch_df, state_dir, key_col, batch_id, d, w)
 
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", os.path.join(state_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_query(stream_df, _sink, sources, state_dir)
 
 
 def read_cms_topk(
@@ -157,6 +147,7 @@ def merge_hist_batch(
 
 def run_hist_stream(
     stream_df: DataFrame,
+    sources: str | Sequence[str],
     state_dir: str,
     value_col: str,
     group_cols: Sequence[str] = (),
@@ -168,13 +159,7 @@ def run_hist_stream(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         merge_hist_batch(batch_df, state_dir, value_col, batch_id, group_cols, width)
 
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", os.path.join(state_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_query(stream_df, _sink, sources, state_dir)
 
 
 def read_hist_quantiles(

@@ -13,12 +13,23 @@ Schema Registry and ``auto.offset.reset=earliest``
 - ``kafka_source_options``: the exact option surface a real Kafka
   deployment swaps in (``subscribe``, ``startingOffsets``); kept as a
   builder because this container ships no Kafka broker or connector jar.
+
+Every streaming query in the package starts through ``start_query`` (or
+its run-to-completion form ``run_query``), which sizes the query's
+state from the bytes of the paths it reads.
 """
 
 from __future__ import annotations
 
+import glob
+import os
+from collections.abc import Callable, Sequence
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import StructType
+
+from ..session import input_width, start_confs
 
 
 def file_stream(
@@ -38,6 +49,62 @@ def file_stream(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.load(path)
+
+
+def source_bytes(sources: str | Sequence[str]) -> int:
+    """Bytes a stream reads from ``sources``: each path is a directory
+    (every file under it), a single file, or a glob such as
+    ``…/events.parque[t]`` (each match counted the same way)."""
+    paths = [sources] if isinstance(sources, str) else sources
+    total = 0
+    for path in (p for pattern in paths for p in glob.glob(pattern)):
+        if os.path.isdir(path):
+            total += sum(
+                os.path.getsize(os.path.join(root, f))
+                for root, _, files in os.walk(path)
+                for f in files
+            )
+        else:
+            total += os.path.getsize(path)
+    return total
+
+
+def start_query(
+    spark: SparkSession, writer: DataStreamWriter, sources: str | Sequence[str]
+) -> StreamingQuery:
+    """Start ``writer`` as an ``availableNow`` query with
+    ``spark.sql.shuffle.partitions`` = ``input_width`` of the bytes of
+    ``sources`` (the paths the query reads), scoped to the ``start()``
+    call; the caller's session confs are left as they were found.
+
+    The width is set on every start: a fresh checkpoint records it as
+    the query's state-store partition count for good, and on a restart
+    Spark takes that count from the checkpoint for the stateful
+    operators only — the query's other shuffles, its ``foreachBatch``
+    merges included, run at the width of this start."""
+    width = input_width(spark, source_bytes(sources))
+    with start_confs(spark, {"spark.sql.shuffle.partitions": str(width)}):
+        return writer.trigger(availableNow=True).start()
+
+
+def run_query(
+    stream_df: DataFrame,
+    sink: Callable[[DataFrame, int], None],
+    sources: str | Sequence[str],
+    state_dir: str,
+) -> None:
+    """Run ``sink`` on each micro-batch of ``stream_df`` (``foreachBatch``)
+    through ``start_query``, with the checkpoint at ``<state_dir>/_ckpt``,
+    and wait until everything available in ``sources`` is processed.
+
+    Update output mode: a stateful operator hands the sink each batch's
+    changed rows; for a stateless query it is the same as append."""
+    writer = (
+        stream_df.writeStream.outputMode("update")
+        .foreachBatch(sink)
+        .option("checkpointLocation", os.path.join(state_dir, "_ckpt"))
+    )
+    start_query(stream_df.sparkSession, writer, sources).awaitTermination()
 
 
 def kafka_source_options(

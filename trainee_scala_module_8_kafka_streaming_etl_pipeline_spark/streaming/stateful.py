@@ -22,13 +22,14 @@ volume tracks batch size, not total key count.
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
+from collections.abc import Iterator, Sequence
 from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .sources import run_query
 from .upsert import read_state as read_versioned
 from .upsert import upsert_batch
 
@@ -98,7 +99,9 @@ def stateful_counter(stream_df: DataFrame) -> DataFrame:
     )
 
 
-def run_stateful_counter(stream_df: DataFrame, out_dir: str) -> None:
+def run_stateful_counter(
+    stream_df: DataFrame, sources: str | Sequence[str], out_dir: str
+) -> None:
     """Drive the stateful operator and materialize its update stream
     into a queryable table (latest emitted row per key, by offset) —
     update-mode emissions are a changelog, so the sink is the keyed
@@ -113,15 +116,7 @@ def run_stateful_counter(stream_df: DataFrame, out_dir: str) -> None:
             deleted_col=None,
         )
 
-    q = (
-        stateful_counter(stream_df)
-        .writeStream.outputMode("update")
-        .foreachBatch(_sink)
-        .option("checkpointLocation", os.path.join(out_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_query(stateful_counter(stream_df), _sink, sources, out_dir)
 
 
 def read_counter(spark: SparkSession, out_dir: str) -> DataFrame:
