@@ -3,9 +3,13 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession  # noqa: E402
+
+from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.session import (  # noqa: E402
+    fork_free_io_conf,
+)
 
 # Two-tier suite (README "Tests"): the default run keeps the fast
 # example/golden/plan/degenerate tests (~12 min) and deselects the
@@ -37,6 +41,7 @@ def pytest_collection_modifyitems(config, items):
 def spark():
     s = (
         SparkSession.builder.master("local[4]")
+        .config(map=fork_free_io_conf("local[4]"))
         .config("spark.sql.shuffle.partitions", "4")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")

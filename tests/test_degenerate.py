@@ -12,13 +12,9 @@ reference's own live-update demo starts from near-empty state
 (/root/reference/README.md:654-679).
 """
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from tools.degenerate import build_variants  # noqa: E402
+from tools.degenerate import build_variants
 
 # (variant, query): every pair crashed before round 5's fixes
 CRASHERS = [

@@ -8,11 +8,14 @@ appears (the reference's live-update demo, README.md:654-679)."""
 
 import json
 import os
+import shutil
+import uuid
 
 import pytest
 from pyspark.errors import StreamingQueryException
 
 from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.session import (
+    fork_free_io_conf,
     input_width,
     start_confs,
 )
@@ -498,6 +501,75 @@ def test_streaming_failed_customers_round_commits_nothing_and_resumes(
     assert _collect_golden(run_flagship_stream(spark, src, work)) == _RENAME_ROUND_GOLDEN
     assert upsert._state_version(shipped) == version + 1
     assert spark.streams.active == []
+
+
+def test_streaming_round_skips_partial_checkpoint_temp_files(spark, tmp_path):
+    """A crash inside a checkpoint write leaves the checkpoint manager's
+    temp file (``.<batch>.<uuid>.tmp``, truncated) beside the offsets and
+    commits logs: the file is renamed into place only once complete.
+    The next round must read neither, nor trip on them."""
+    src = str(tmp_path / "src")
+    work = str(tmp_path / "work")
+    shipped = os.path.join(work, "state", "shipped_orders")
+    _golden_rounds(spark, src, work)
+    version = upsert._state_version(shipped)
+    for query in ("customers", "shipped"):
+        for log in ("offsets", "commits"):
+            log_dir = os.path.join(work, "checkpoints", query, log)
+            batch = 1 + max(int(n) for n in os.listdir(log_dir) if n.isdigit())
+            with open(os.path.join(log_dir, f".{batch}.{uuid.uuid4()}.tmp"), "w") as fh:
+                fh.write('v1\n{"batchWatermarkMs":0,"batchTimesta')
+
+    _drop_rename_round(src)
+    assert _collect_golden(run_flagship_stream(spark, src, work)) == _RENAME_ROUND_GOLDEN
+    assert upsert._state_version(shipped) == version + 1
+
+
+@pytest.mark.skipif(
+    shutil.which("javac") is None,
+    reason="no javac: the session keeps Hadoop's file: filesystem, which forks chmod",
+)
+def test_streaming_round_forks_no_shell_process(spark, tmp_path):
+    """Without the native Hadoop library, Hadoop's local filesystem forks
+    ``chmod`` per file and ``readlink`` per checkpoint rename (hundreds
+    per flagship round); ``session.fork_free_io_conf`` removes both.  A
+    JFR recording of process starts over one golden increment round
+    must hold neither."""
+    jvm = spark._jvm
+    src = str(tmp_path / "src")
+    work = str(tmp_path / "work")
+    _drop(src, "seed", CUSTOMERS_SEED, ORDERS_SEED, SHIPMENTS_SEED)
+    run_flagship_stream(spark, src, work)
+    _drop(src, "inc", CUSTOMERS_INCREMENT, ORDERS_INCREMENT, SHIPMENTS_INCREMENT)
+
+    recording = jvm.jdk.jfr.Recording()
+    recording.enable("jdk.ProcessStart")
+    recording.start()
+    try:
+        out = run_flagship_stream(spark, src, work)
+    finally:
+        recording.stop()
+        dump = jvm.java.io.File(str(tmp_path / "round.jfr")).toPath()
+        recording.dump(dump)
+        recording.close()
+    assert _collect_golden(out) == GOLDEN_SEED | {GOLDEN_INCREMENT_ROW}
+    commands = [
+        str(event.getString("command"))
+        for event in jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(dump)
+    ]
+    forks = [c for c in commands if os.path.basename(c.split()[0]) in ("chmod", "readlink")]
+    assert forks == [], f"{len(forks)} shell forks, e.g. {forks[:3]}"
+
+
+def test_fork_free_filesystem_only_where_the_driver_is_the_executor():
+    """A cluster's executors would not have the compiled class, so only a
+    ``local``/``local[...]`` master gets it; every master gets the
+    rename-based checkpoint manager."""
+    manager = "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+    for master in ("spark://host:7077", "yarn", "local-cluster[2,1,1024]"):
+        assert fork_free_io_conf(master) == {
+            "spark.sql.streaming.checkpointFileManagerClass": manager
+        }
 
 
 def test_schema_memo_safe_under_concurrent_commits(tmp_path, monkeypatch):

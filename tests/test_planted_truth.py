@@ -18,13 +18,9 @@ campaign-manual (they remain covered by the DuckDB oracle here).
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from tools import sf1_planted  # noqa: E402
+from tools import sf1_planted
 
 SF = "/root/testdata/sf0.01"
 

@@ -25,12 +25,13 @@ import math
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 from pyspark.sql import SparkSession
 
 import __spark_entry__ as entrymod
+from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.session import fork_free_io_conf
 from tools.typecheck import norm_type
 
 TABLES = (
@@ -94,6 +95,7 @@ def main():
 
     spark = (
         SparkSession.builder.master("local[8]")
+        .config(map=fork_free_io_conf("local[8]"))
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.driver.memory", "8g")
         .config("spark.ui.enabled", "false")

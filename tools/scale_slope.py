@@ -27,13 +27,14 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 
 import __spark_entry__ as entrymod
 from bench import build_session
 
 SF01 = "/root/testdata/sf0.1"
-SF1 = os.environ.get("SCALE_OUT", "/root/repo/.scale/sf1")
+SF1 = os.environ.get("SCALE_OUT", os.path.join(_ROOT, ".scale", "sf1"))
 
 # the bench top by r7/r8 cost, per VERDICT r7 ask #4
 DEFAULT_QUERIES = [

@@ -14,15 +14,25 @@ Defaults are chosen for correctness-at-scale first:
   (stream-table, README.md:448-458) has a small dimension side; at scale
   the customer dim of a 100 TB fact table still fits executor memory and
   broadcasting removes the big-side shuffle entirely.
+- **Fork-free local file I/O** (``fork_free_io_conf``): checkpoint and
+  state-table writes start no shell process on a host without the native
+  Hadoop library.
 """
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import shutil
+import subprocess
+import tempfile
 import threading
+import zipfile
 from collections.abc import Iterator, Mapping
 from contextlib import contextmanager
 
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 _LOCAL_CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
@@ -69,11 +79,106 @@ def build_session(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
+    conf = fork_free_io_conf(master)
+    # a caller's class path is appended to, so the jar that
+    # fs.file.impl names stays on it
     for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+        conf[k] = os.pathsep.join((conf[k], v)) if k == _CLASSPATH and k in conf else v
+    spark = builder.config(map=conf).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+_CLASSPATH = "spark.driver.extraClassPath"
+_FORK_FREE_FS = "streamingetl.hadoop.ForkFreeLocalFileSystem"
+_FORK_FREE_SRC = os.path.join(os.path.dirname(__file__), "jvm", "ForkFreeLocalFileSystem.java")
+
+
+def fork_free_io_conf(master: str) -> dict[str, str]:
+    """Session confs that keep local checkpoint and state-table writes
+    from forking the driver.  Set them before the JVM starts (the class
+    path is fixed at launch).
+
+    Without the native Hadoop library, ``RawLocalFileSystem`` runs a
+    shell ``readlink`` for every link check and a shell ``chmod`` for
+    every permission change, about 2.5 ms each: some 300 process starts
+    per flagship round, on the offsets and commits WAL, the source logs,
+    the state-store deltas, the ``.crc`` side files and the parquet
+    commit protocol.
+
+    1. ``FileSystemBasedCheckpointFileManager`` replaces the default
+       ``FileContext`` manager, whose ``renameTempFile`` calls
+       ``getFileLinkStatus`` (a ``readlink``) on every checkpoint file.
+       Atomicity holds: a temp file is renamed within its own directory
+       through ``RawLocalFileSystem.rename``, which is ``rename(2)``;
+       Hadoop's copy-and-delete fallback runs only if ``File.renameTo``
+       fails, which it cannot within one directory; the ``exists(dst)``
+       check before the rename matters only to two writers of one
+       checkpoint, which Structured Streaming already forbids; and the
+       ``.crc`` pair is renamed data first, as ``ChecksumFs`` does.  On
+       HDFS the rename is one namenode operation under either manager.
+    2. ``ForkFreeLocalFileSystem`` (``jvm/``) is Hadoop's checksummed
+       ``LocalFileSystem`` with ``setPermission`` done through java.nio
+       instead of a forked ``chmod``.  It replaces the ``file:``
+       filesystem Spark's jars register (Hive's ``ProxyLocalFileSystem``,
+       a ``LocalFileSystem`` whose ``rename`` refuses an existing target
+       file), so a state-store delta rewritten by a retried batch
+       replaces its target, as the ``FileContext`` manager's overwriting
+       rename did.  It is used only for a ``local`` or ``local[...]``
+       master, where the driver is the executor and so has the class on
+       its class path, and only where ``javac`` can build it.  Otherwise
+       (``javac`` absent, or a cluster master, whose executors would not
+       have the jar and whose hosts have native Hadoop) the session keeps
+       Hadoop's own ``file:`` filesystem.
+    """
+    conf = {
+        "spark.sql.streaming.checkpointFileManagerClass": (
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager"
+        ),
+    }
+    local = master == "local" or master.startswith("local[")
+    jar = _fork_free_fs_jar() if local else None
+    if jar is not None:
+        conf[_CLASSPATH] = jar
+        conf["spark.hadoop.fs.file.impl"] = _FORK_FREE_FS
+    return conf
+
+
+def _fork_free_fs_jar() -> str | None:
+    """Path of the compiled ``ForkFreeLocalFileSystem`` jar, built once
+    per source version into the user cache dir with the JDK's ``javac``
+    against the Hadoop API jar Spark runs with; None without ``javac`` or
+    without that jar (a Spark build that takes Hadoop from the host)."""
+    javac = shutil.which("javac")
+    hadoop_api = glob.glob(os.path.join(_find_spark_home(), "jars", "hadoop-client-api-*.jar"))
+    if javac is None or not hadoop_api:
+        return None
+    with open(_FORK_FREE_SRC, "rb") as fh:
+        digest = hashlib.sha256(fh.read()).hexdigest()
+    cache = os.path.join(
+        os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"), __package__
+    )
+    jar = os.path.join(cache, f"fork-free-fs-{digest[:16]}.jar")
+    if os.path.exists(jar):
+        return jar
+    os.makedirs(cache, exist_ok=True)
+    # build in a private temp dir, then rename: concurrent builders each
+    # publish a whole jar, and a reader never sees a partial one
+    with tempfile.TemporaryDirectory(dir=cache) as tmp:
+        classes = os.path.join(tmp, "classes")
+        subprocess.run(
+            [javac, "--release", "17", "-nowarn", "-cp", hadoop_api[0], "-d", classes, _FORK_FREE_SRC],
+            check=True,
+        )
+        part = os.path.join(tmp, "fs.jar")
+        with zipfile.ZipFile(part, "w") as zf:
+            for root, _, files in os.walk(classes):
+                for name in files:
+                    path = os.path.join(root, name)
+                    zf.write(path, os.path.relpath(path, classes))
+        os.replace(part, jar)
+    return jar
 
 
 def input_width(spark: SparkSession, input_bytes: int) -> int:
