@@ -11,7 +11,8 @@ Execution is forced with the `noop` datasource write (full pipeline runs,
 nothing is collected to the driver), matching how a cluster job would
 materialize results to a sink rather than the driver.
 
-Methodology: one untimed warmup pass over every headline query, then
+Methodology: one warmup pass over every headline query (its per-query
+seconds go to BENCH_DETAIL.json's "warmup", outside the total), then
 THREE timed steady-state passes reporting the per-query minimum.  At
 sf0.1 a complex plan's wall time is dominated by one-time whole-stage-
 codegen *compilation* (measured ~4s for a 60-aggregate plan whose
@@ -21,6 +22,11 @@ the min-of-3 damps scheduler/GC noise on a shared host.  All DataFrame
 caches are dropped between passes — every timed run re-executes the
 full scan/shuffle/join path from parquet, reusing only JIT-compiled
 code.
+
+`bench_sf` (the loop), `run_entry` (one noop-sink run) and `session`
+(the session set-up) are the only timing code: the tools under tools/
+that run registry entries import them (`tools/perfex.py` times a named
+subset, which is how two checkouts are A/B-compared).
 """
 
 from __future__ import annotations
@@ -30,10 +36,14 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod
+from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.catalog import DEFAULT_SF_DIR
 from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.session import build_session
+
+SF_DIR = os.path.abspath(DEFAULT_SF_DIR)
 
 # Representative slice of SURVEY.md §2 + LLM-pipeline operators: the
 # flagship CDC->join->compaction plan, the heavy joins/aggs over events,
@@ -154,51 +164,83 @@ HEADLINE = [
 ]
 
 
+def session(app_name: str, extra_conf: dict[str, str] | None = None):
+    """The session every tool that runs registry entries uses: the
+    engine's ``build_session`` with this harness's driver heap and log
+    level.  Spark starts with the working directory at this checkout's
+    root: Python workers put their working directory first on
+    ``sys.path``, so a run started elsewhere (an A/B from an archived
+    copy, with the working directory in another checkout) would have its
+    workers import that other checkout's package."""
+    os.chdir(ROOT)
+    spark = build_session(
+        app_name=app_name,
+        extra_conf={
+            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+            **(extra_conf or {}),
+        },
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def run_entry(spark, fn, sf_dir: str) -> float:
+    """Run registry entry ``fn`` at ``sf_dir`` into the ``noop`` sink (the
+    whole plan executes, nothing is collected to the driver) and return
+    its wall seconds.  A forced full GC runs first, outside the timer:
+    it keeps one query's garbage from being collected (and billed)
+    inside the next query's wall time — per-query attribution noise
+    otherwise reaches 2x on a shared host."""
+    spark.sparkContext._jvm.System.gc()
+    t0 = time.perf_counter()
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - t0
+
+
 def bench_sf(
-    spark, sf_dir: str, passes: int
-) -> tuple[dict[str, float], dict[str, str]]:
-    """One warmup pass + ``passes`` timed passes over HEADLINE at
-    ``sf_dir``; returns (per-query min-of-passes, failures)."""
+    spark, sf_dir: str, passes: int, names: list[str] = HEADLINE
+) -> tuple[dict[str, float], dict[str, str], dict[str, float]]:
+    """One warmup pass + ``passes`` timed passes over ``names`` at
+    ``sf_dir``; returns (per-query min-of-passes, failures, per-query
+    warmup seconds).  Names missing from the registry are skipped."""
     qs = entrymod.queries()
     failures: dict[str, str] = {}
 
     def run_one(name: str) -> float | None:
-        """Execute one query with the noop sink; a single broken query
-        must not take down the whole bench artifact."""
+        """Time one query; a single broken query must not take down the
+        whole bench artifact."""
         fn = qs.get(name)
         if fn is None:
             return None
-        t0 = time.perf_counter()
         try:
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            return round(run_entry(spark, fn, sf_dir), 3)
         except Exception as exc:  # noqa: BLE001 - record and continue
             failures[name] = f"{type(exc).__name__}: {exc}"[:200]
             return None
-        return round(time.perf_counter() - t0, 3)
 
-    # Untimed warmup pass: compiles every plan's whole-stage codegen,
-    # warms parquet footer/file-listing caches and the JVM JIT.
-    for name in HEADLINE:
-        run_one(name)
+    # Warmup pass, outside the result: compiles every plan's whole-stage
+    # codegen, warms parquet footer/file-listing caches and the JVM JIT,
+    # and builds the indexes `_stage_memo` keeps — its seconds are
+    # reported on their own.
+    warmup: dict[str, float] = {}
+    for name in names:
+        elapsed = run_one(name)
+        if elapsed is not None:
+            warmup[name] = elapsed
     # Drop any DataFrame caches the operators created so the timed pass
     # re-executes the full data path from parquet.
     spark.catalog.clearCache()
 
     timings: dict[str, float] = {}
     for _ in range(passes):
-        for name in HEADLINE:
+        for name in names:
             if name in failures:
                 continue
-            # A forced full GC between queries keeps one query's garbage
-            # from being collected (and billed) inside the next query's
-            # wall time — per-query attribution noise otherwise reaches
-            # 2x on a shared host.  The GC itself runs outside the timer.
-            spark.sparkContext._jvm.System.gc()
             elapsed = run_one(name)
             if elapsed is not None:
                 timings[name] = min(timings.get(name, elapsed), elapsed)
         spark.catalog.clearCache()
-    return timings, failures
+    return timings, failures, warmup
 
 
 SECONDARY_SF = "/root/testdata/sf0.01"
@@ -230,18 +272,10 @@ def canary_sec(passes: int = 3) -> float:
 
 
 def main() -> int:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = build_session(
-        app_name="bench",
-        extra_conf={
-            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    sf_dir = SF_DIR
+    spark = session("bench")
 
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-    )
+    detail_path = os.path.join(ROOT, "BENCH_DETAIL.json")
     # Comparability baseline: the canary of the last COMPARABLE run
     # ("baseline_sec"), not merely the previous run's reading — each run
     # overwrites BENCH_DETAIL.json, so comparing against the immediate
@@ -260,7 +294,7 @@ def main() -> int:
             prior_canary = None
 
     canary_start = canary_sec()
-    timings, failures = bench_sf(spark, sf_dir, passes=3)
+    timings, failures, warmup = bench_sf(spark, sf_dir, passes=3)
 
     canary_end = canary_sec()
     canary = min(canary_start, canary_end)
@@ -277,6 +311,7 @@ def main() -> int:
         "value": total,
         "unit": "sec",
         "queries": timings,
+        "warmup": warmup,
         "sf": sf_dir,
         "canary": {
             "sec": canary,
@@ -306,7 +341,7 @@ def main() -> int:
     if os.path.isdir(SECONDARY_SF) and os.path.realpath(
         SECONDARY_SF
     ) != os.path.realpath(sf_dir):
-        sec_timings, sec_failures = bench_sf(spark, SECONDARY_SF, passes=2)
+        sec_timings, sec_failures, sec_warmup = bench_sf(spark, SECONDARY_SF, passes=2)
         ratios = {
             k: round(timings[k] / v, 2)
             for k, v in sec_timings.items()
@@ -316,6 +351,7 @@ def main() -> int:
             "sf": SECONDARY_SF,
             "queries": sec_timings,
             "failures": sec_failures,
+            "warmup": sec_warmup,
             "primary_over_secondary_ratio": ratios,
         }
 

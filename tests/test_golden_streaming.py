@@ -14,6 +14,7 @@ import uuid
 import pytest
 from pyspark.errors import StreamingQueryException
 
+from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark import session
 from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.session import (
     fork_free_io_conf,
     input_width,
@@ -563,13 +564,37 @@ def test_streaming_round_forks_no_shell_process(spark, tmp_path):
 
 def test_fork_free_filesystem_only_where_the_driver_is_the_executor():
     """A cluster's executors would not have the compiled class, so only a
-    ``local``/``local[...]`` master gets it; every master gets the
-    rename-based checkpoint manager."""
-    manager = "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+    ``local``/``local[...]`` master gets it; a cluster master keeps
+    Spark's defaults, the checkpoint manager included."""
     for master in ("spark://host:7077", "yarn", "local-cluster[2,1,1024]"):
-        assert fork_free_io_conf(master) == {
-            "spark.sql.streaming.checkpointFileManagerClass": manager
-        }
+        assert fork_free_io_conf(master) == {}
+
+
+def test_checkpoint_overwrite_replaces_its_target_without_the_fork_free_class(
+    spark, tmp_path, monkeypatch
+):
+    """Without the compiled class (no ``javac``), the session's ``file:``
+    filesystem is Hive's ``ProxyLocalFileSystem``, whose ``rename``
+    refuses an existing target.  The checkpoint manager those confs give
+    must still overwrite: a state-store delta re-written by a retried
+    batch reads back its new content and leaves no temp file."""
+    monkeypatch.setattr(session, "_fork_free_fs_jar", lambda: None)
+    jvm = spark._jvm
+    conf = jvm.org.apache.hadoop.conf.Configuration(spark._jsc.hadoopConfiguration())
+    conf.unset("fs.file.impl")
+    conf.set("fs.file.impl.disable.cache", "true")
+    for key, value in fork_free_io_conf("local[4]").items():
+        conf.set(key.removeprefix("spark.hadoop."), value)
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)), conf
+    )
+    delta = jvm.org.apache.hadoop.fs.Path(str(tmp_path / "1.delta"))
+    for content in (b"old", b"new"):
+        out = manager.createAtomic(delta, True)
+        out.write(bytearray(content))
+        out.close()
+    assert (tmp_path / "1.delta").read_bytes() == b"new"
+    assert [n for n in os.listdir(tmp_path) if n.endswith((".tmp", ".tmp.crc"))] == []
 
 
 def test_schema_memo_safe_under_concurrent_commits(tmp_path, monkeypatch):

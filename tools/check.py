@@ -25,7 +25,8 @@ import math
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 
 import duckdb
 from pyspark.sql import SparkSession
@@ -83,7 +84,7 @@ def main():
                 file=sys.stderr,
             )
             return 2
-        out_path = args[i + 1]
+        out_path = os.path.abspath(args[i + 1])
         args = args[:i] + args[i + 2:]
     if "--sigdigits" in args:
         global _SIG_DIGITS
@@ -93,6 +94,10 @@ def main():
     sf = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
 
+    # Spark starts in this checkout's root: Python workers import the
+    # package from their working directory first (see bench.session)
+    sf = os.path.abspath(sf)
+    os.chdir(_ROOT)
     spark = (
         SparkSession.builder.master("local[8]")
         .config(map=fork_free_io_conf("local[8]"))

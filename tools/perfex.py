@@ -1,11 +1,12 @@
-"""A/B micro-bench for individual registry entries.
+"""Time named registry entries with bench.py's loop (`bench.bench_sf`).
 
-Usage: python tools/perfex.py q1 q2 ...  [PASSES=n] [SF=/root/testdata/sf0.1]
+Usage: [PASSES=n] [SPARK_GRAFT_SF_DIR=dir] python <checkout>/tools/perfex.py q1 q2 ...
 
-Same methodology as bench.py (noop sink, warmup pass, min-of-N with
-cache clear + forced GC between queries) but over an explicit entry
-subset, so a plan change can be measured in ~30 s instead of a full
-campaign.  Prints one JSON line per entry and a total.
+Warmup pass, then min of PASSES (default 3) timed noop-sink passes, so a
+plan change is measured in ~30 s instead of a full campaign.  Prints one
+JSON line per entry and a total.  An A/B is this command run from each
+checkout in turn, alternating sides: each run imports only its own
+checkout (see `bench.session`).
 """
 
 from __future__ import annotations
@@ -13,46 +14,28 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as entrymod
-from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.session import build_session
+import bench  # noqa: E402
 
 
 def main() -> int:
     names = [a for a in sys.argv[1:] if not a.startswith("-")]
-    passes = int(os.environ.get("PASSES", "3"))
-    sf_dir = os.environ.get("SF", "/root/testdata/sf0.1")
-    spark = build_session(app_name="perfex")
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = entrymod.queries()
-    bad = [n for n in names if n not in qs]
+    bad = [n for n in names if n not in bench.entrymod.queries()]
     if bad:
         print(f"unknown entries: {bad}", file=sys.stderr)
         return 2
-
-    def run_one(name: str) -> float:
-        t0 = time.perf_counter()
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
-    for n in names:  # warmup: codegen + JIT + footer caches
-        run_one(n)
-    spark.catalog.clearCache()
-
-    best: dict[str, float] = {}
-    for _ in range(passes):
-        for n in names:
-            spark.sparkContext._jvm.System.gc()
-            t = run_one(n)
-            best[n] = min(best.get(n, t), t)
-        spark.catalog.clearCache()
-    for n, t in best.items():
-        print(json.dumps({"query": n, "sec": round(t, 3)}))
-    print(json.dumps({"total": round(sum(best.values()), 3), "passes": passes}))
-    return 0
+    passes = int(os.environ.get("PASSES", "3"))
+    spark = bench.session("perfex")
+    timings, failures, _ = bench.bench_sf(spark, bench.SF_DIR, passes, names)
+    for n, t in timings.items():
+        print(json.dumps({"query": n, "sec": t}))
+    for n, err in failures.items():
+        print(json.dumps({"query": n, "error": err}))
+    print(json.dumps({"total": round(sum(timings.values()), 3), "passes": passes}))
+    spark.stop()
+    return 1 if failures else 0
 
 
 if __name__ == "__main__":

@@ -1,6 +1,15 @@
-"""Dump the executed physical plan of every headline bench query to
-PLANS.md — the plan-quality audit artifact.  Run after operator
-changes: `python tools/plans.py` (uses sf0.01 so AQE finalizes fast).
+"""Physical plans of registry entries, as `explain("formatted")` prints
+them, at $SPARK_GRAFT_SF_DIR (default sf0.01, so AQE finalizes fast).
+
+Usage:
+  python tools/plans.py            # every headline bench query -> PLANS.md
+  python tools/plans.py q1 [q2 ...]  # the named entries -> stdout
+
+With no arguments it writes PLANS.md, the plan-quality audit artifact;
+run it after operator changes.  With entry names, a before/after
+comparison is one run per checkout, diffed.  Streaming entries have no
+single plan (theirs are per-micro-batch): PLANS.md omits them and the
+stdout form prints a one-line note.
 
 What to look for in the output (the review checklist):
   - `PushedFilters` / pruned `ReadSchema` on every parquet scan
@@ -18,18 +27,39 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as entrymod  # noqa: E402
 import bench  # noqa: E402
-from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.session import (  # noqa: E402
-    build_session,
-)
+
+_STREAMING_NOTE = "streaming entry: plan is per-micro-batch; see tools/profile_streaming.py"
+
+
+def _plan(df) -> str:
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue().rstrip()
 
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    spark = build_session(app_name="plans")
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = entrymod.queries()
+    names = sys.argv[1:]
+    qs = bench.entrymod.queries()
+    bad = [n for n in names if n not in qs]
+    if bad:
+        print(f"unknown entries: {bad}", file=sys.stderr)
+        return 2
+    sf_dir = os.path.abspath(sf_dir)  # bench.session changes directory
+    spark = bench.session("plans")
+    for name in names:
+        streaming = name.startswith("streaming_")
+        plan = _STREAMING_NOTE if streaming else _plan(qs[name](spark, sf_dir))
+        print(f"## {name}\n\n{plan}\n")
+    if not names:
+        _write_plans_md(spark, qs, sf_dir)
+    spark.stop()
+    return 0
+
+
+def _write_plans_md(spark, qs, sf_dir: str) -> None:
     out = [
         "# PLANS — physical plans of the headline queries",
         "",
@@ -39,22 +69,13 @@ def main() -> int:
         "",
     ]
     for name in bench.HEADLINE:
-        if name.startswith("streaming_"):
+        if name.startswith("streaming_") or name not in qs:
             continue
-        fn = qs.get(name)
-        if fn is None:
-            continue
-        df = fn(spark, sf_dir)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        out.append(f"## {name}\n\n```\n{buf.getvalue().rstrip()}\n```\n")
-    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
+        out.append(f"## {name}\n\n```\n{_plan(qs[name](spark, sf_dir))}\n```\n")
+    path = os.path.join(bench.ROOT, "PLANS.md")
     with open(path, "w") as f:
         f.write("\n".join(out))
     print(f"wrote {path}")
-    spark.stop()
-    return 0
 
 
 if __name__ == "__main__":

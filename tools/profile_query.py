@@ -7,7 +7,7 @@ input/shuffle bytes and records.  This answers "where does the wall
 time actually go" — scan vs exchange vs compute — without the (absent)
 interactive UI.
 
-Usage: python tools/profile_query.py q1 [q2 ...]  [SF=/root/testdata/sf0.1]
+Usage: [SPARK_GRAFT_SF_DIR=dir] python tools/profile_query.py q1 [q2 ...]
 Prints per query: total sec, job count, and the top stages by time.
 """
 
@@ -16,15 +16,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as entrymod
-from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.session import (
-    build_session,
-)
+import bench  # noqa: E402
 
 
 def _rest(base: str, path: str):
@@ -34,31 +30,21 @@ def _rest(base: str, path: str):
 
 def main() -> int:
     names = [a for a in sys.argv[1:] if not a.startswith("-")]
-    sf_dir = os.environ.get("SF", "/root/testdata/sf0.1")
-    spark = build_session(
-        app_name="profile_query",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.port": "4055",
-            "spark.driver.memory": "16g",
-        },
+    spark = bench.session(
+        "profile_query", {"spark.ui.enabled": "true", "spark.ui.port": "4055"}
     )
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = entrymod.queries()
+    qs = bench.entrymod.queries()
     app_id = spark.sparkContext.applicationId
     base = f"http://localhost:4055/api/v1/applications/{app_id}"
 
     for name in names:
         fn = qs[name]
         # warmup: codegen, JIT, footer caches
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        bench.run_entry(spark, fn, bench.SF_DIR)
         spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
 
         jobs_before = {j["jobId"] for j in _rest(base, "/jobs")}
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        wall = time.perf_counter() - t0
+        wall = bench.run_entry(spark, fn, bench.SF_DIR)
         spark.catalog.clearCache()
 
         jobs = [j for j in _rest(base, "/jobs") if j["jobId"] not in jobs_before]

@@ -8,7 +8,7 @@ started during the entry and record its final ``recentProgress`` —
 giving per-batch durationMs components (addBatch, getBatch, walCommit,
 queryPlanning, triggerExecution, stateStore commit times).
 
-Usage: python tools/profile_streaming.py q1 [q2 ...] [SF=/root/testdata/sf0.1]
+Usage: [SPARK_GRAFT_SF_DIR=dir] python tools/profile_streaming.py q1 [q2 ...]
 """
 
 from __future__ import annotations
@@ -16,26 +16,18 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as entrymod
-from pyspark.sql.streaming import DataStreamWriter
-from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.session import (
-    build_session,
-)
+from pyspark.sql.streaming import DataStreamWriter  # noqa: E402
+
+import bench  # noqa: E402
 
 
 def main() -> int:
     names = [a for a in sys.argv[1:] if not a.startswith("-")]
-    sf_dir = os.environ.get("SF", "/root/testdata/sf0.1")
-    spark = build_session(
-        app_name="profile_streaming",
-        extra_conf={"spark.driver.memory": "16g"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = entrymod.queries()
+    spark = bench.session("profile_streaming")
+    qs = bench.entrymod.queries()
 
     captured = []
     orig_start = DataStreamWriter.start
@@ -49,15 +41,11 @@ def main() -> int:
 
     for name in names:
         fn = qs[name]
-        # warmup
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        bench.run_entry(spark, fn, bench.SF_DIR)  # warmup
         spark.catalog.clearCache()
         captured.clear()
-        spark.sparkContext._jvm.System.gc()
 
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        wall = time.perf_counter() - t0
+        wall = bench.run_entry(spark, fn, bench.SF_DIR)
         print(f"\n=== {name}: wall={wall:.3f}s  streaming_queries={len(captured)}")
         for i, q in enumerate(captured):
             try:

@@ -2,16 +2,18 @@
 expensive headline queries (SCALING.md; VERDICT r7 ask #4, r8 ask #2).
 Generates nothing — run tools/scale_gen.py first.
 
-Method mirrors bench.py: one untimed warmup pass per sf, then
-min-of-N timed passes with clearCache() + forced GC between queries.
-10x data -> slope ~= the query's data exponent (fixed-cost-dominated
-queries land well under 10; a slope >> 10 flags a super-linear plan).
+Method is bench.py's loop (`bench.bench_sf`) at each sf: one warmup
+pass, then min-of-N timed noop-sink passes with clearCache() + forced
+GC between queries.  10x data -> slope ~= the query's data exponent
+(fixed-cost-dominated queries land well under 10; a slope >> 10 flags
+a super-linear plan).
 
 Usage:
   python tools/scale_slope.py [passes] [--stamp LABEL]
       [--small DIR --big DIR --decade NAME] [query ...]
 
-Defaults measure sf0.1 -> sf~1 (decade "sf0.1_to_sf1").  Pass
+Defaults measure $SPARK_GRAFT_SF_DIR (default sf0.1) -> sf~1 (decade
+"sf0.1_to_sf1").  Pass
 ``--small .scale/sf1 --big .scale/sf10 --decade sf1_to_sf10`` for the
 third decade.  Results merge into SCALE_SLOPE.json per (query, decade)
 with per-row passes/stamp/dirs — rows measured under different
@@ -25,15 +27,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _ROOT)
 
-import __spark_entry__ as entrymod
-from bench import build_session
+import bench  # noqa: E402
 
-SF01 = "/root/testdata/sf0.1"
 SF1 = os.environ.get("SCALE_OUT", os.path.join(_ROOT, ".scale", "sf1"))
 
 # the bench top by r7/r8 cost, per VERDICT r7 ask #4
@@ -49,22 +48,6 @@ DEFAULT_QUERIES = [
     "corpus_clean",
     "text_stats",
 ]
-
-
-def bench_dir(spark, queries, names, sf_dir, passes):
-    timings: dict[str, float] = {}
-    for name in names:  # warmup (JIT, codegen, memo build)
-        queries[name](spark, sf_dir).collect()
-    spark.catalog.clearCache()
-    for _ in range(passes):
-        for name in names:
-            spark.sparkContext._jvm.System.gc()
-            t0 = time.perf_counter()
-            queries[name](spark, sf_dir).collect()
-            dt = time.perf_counter() - t0
-            timings[name] = min(timings.get(name, dt), dt)
-        spark.catalog.clearCache()
-    return timings
 
 
 def _flag(args: list[str], name: str, default: str | None) -> str | None:
@@ -92,31 +75,31 @@ def _is_decade_row(rows) -> bool:
 def main() -> int:
     args = sys.argv[1:]
     stamp = _flag(args, "--stamp", "unstamped")
-    small_dir = _flag(args, "--small", SF01)
-    big_dir = _flag(args, "--big", SF1)
+    small_dir = os.path.abspath(_flag(args, "--small", bench.SF_DIR))
+    big_dir = os.path.abspath(_flag(args, "--big", SF1))
     decade = _flag(args, "--decade", "sf0.1_to_sf1")
     passes = int(args[0]) if args and args[0].isdigit() else 2
     names = [a for a in args if not a.isdigit()] or DEFAULT_QUERIES
-    spark = build_session(
-        app_name="scale_slope",
-        extra_conf={"spark.driver.memory": "24g"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    queries = entrymod.queries()
-    registry = set(queries)
-
-    small = bench_dir(spark, queries, names, small_dir, passes)
-    big = bench_dir(spark, queries, names, big_dir, passes)
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "SCALE_SLOPE.json",
-    )
+    registry = set(bench.entrymod.queries())
+    bad = [n for n in names if n not in registry]
+    if bad:
+        print(f"unknown entries: {bad}", file=sys.stderr)
+        return 2
+    spark = bench.session("scale_slope")
+    small, small_failures, _ = bench.bench_sf(spark, small_dir, passes, names)
+    big, big_failures, _ = bench.bench_sf(spark, big_dir, passes, names)
+    failures = {**small_failures, **big_failures}
+    for n, err in failures.items():
+        print(json.dumps({"query": n, "error": err}), file=sys.stderr)
+    names = [n for n in names if n in small and n in big]
+    path = os.path.join(_ROOT, "SCALE_SLOPE.json")
     # Merge per (query, decade): a subset re-measurement refreshes only
     # its own rows, each row carries the conditions it was measured
     # under, and rows for renamed/removed registry entries are dropped.
-    out: dict = {"method": "min-of-N adjacent passes per sf; rows carry "
-                 "their own passes/stamp and are only A/B-comparable "
-                 "within one stamp (SCALING.md host-drift rule)",
+    out: dict = {"method": "bench.bench_sf per sf: warmup, then min-of-N "
+                 "adjacent noop-sink passes; rows carry their own "
+                 "passes/stamp and are only A/B-comparable within one "
+                 "stamp (SCALING.md host-drift rule)",
                  "queries": {}}
     if os.path.exists(path):
         with open(path) as fh:
@@ -142,7 +125,8 @@ def main() -> int:
     print(json.dumps(
         {n: out["queries"][n][decade] for n in names}, indent=1, sort_keys=True
     ))
-    return 0
+    spark.stop()
+    return 1 if failures else 0
 
 
 if __name__ == "__main__":

@@ -106,7 +106,18 @@ def fork_free_io_conf(master: str) -> dict[str, str]:
     the state-store deltas, the ``.crc`` side files and the parquet
     commit protocol.
 
-    1. ``FileSystemBasedCheckpointFileManager`` replaces the default
+    Both settings come together or not at all, for a ``local`` or
+    ``local[...]`` master (the driver is the executor, so it has the
+    class on its class path) where ``javac`` can build the class:
+
+    1. ``ForkFreeLocalFileSystem`` (``jvm/``) is Hadoop's checksummed
+       ``LocalFileSystem`` with ``setPermission`` done through java.nio
+       instead of a forked ``chmod``.  It replaces the ``file:``
+       filesystem Spark's jars register (Hive's ``ProxyLocalFileSystem``,
+       a ``LocalFileSystem`` whose ``rename`` refuses an existing target
+       file), and its ``rename`` replaces an existing target, as
+       ``rename(2)`` does.
+    2. ``FileSystemBasedCheckpointFileManager`` replaces the default
        ``FileContext`` manager, whose ``renameTempFile`` calls
        ``getFileLinkStatus`` (a ``readlink``) on every checkpoint file.
        Atomicity holds: a temp file is renamed within its own directory
@@ -115,34 +126,29 @@ def fork_free_io_conf(master: str) -> dict[str, str]:
        fails, which it cannot within one directory; the ``exists(dst)``
        check before the rename matters only to two writers of one
        checkpoint, which Structured Streaming already forbids; and the
-       ``.crc`` pair is renamed data first, as ``ChecksumFs`` does.  On
-       HDFS the rename is one namenode operation under either manager.
-    2. ``ForkFreeLocalFileSystem`` (``jvm/``) is Hadoop's checksummed
-       ``LocalFileSystem`` with ``setPermission`` done through java.nio
-       instead of a forked ``chmod``.  It replaces the ``file:``
-       filesystem Spark's jars register (Hive's ``ProxyLocalFileSystem``,
-       a ``LocalFileSystem`` whose ``rename`` refuses an existing target
-       file), so a state-store delta rewritten by a retried batch
-       replaces its target, as the ``FileContext`` manager's overwriting
-       rename did.  It is used only for a ``local`` or ``local[...]``
-       master, where the driver is the executor and so has the class on
-       its class path, and only where ``javac`` can build it.  Otherwise
-       (``javac`` absent, or a cluster master, whose executors would not
-       have the jar and whose hosts have native Hadoop) the session keeps
-       Hadoop's own ``file:`` filesystem.
+       ``.crc`` pair is renamed data first, as ``ChecksumFs`` does.  Its
+       overwriting rename (a state-store delta rewritten by a retried
+       batch) relies on ``rename`` replacing an existing target, which
+       the class of 1 does.
+
+    Every other session (``javac`` absent, or a cluster master, whose
+    executors would not have the jar and whose hosts have native Hadoop)
+    keeps Spark's defaults.  The rename-based manager is not for them:
+    over ``ProxyLocalFileSystem``, or HDFS, whose ``FileSystem.rename``
+    also refuses an existing target, its overwrite returns silently and
+    keeps the old file, where the ``FileContext`` manager replaces it.
     """
-    conf = {
+    jar = _fork_free_fs_jar() if master == "local" or master.startswith("local[") else None
+    if jar is None:
+        return {}
+    return {
+        _CLASSPATH: jar,
+        "spark.hadoop.fs.file.impl": _FORK_FREE_FS,
         "spark.sql.streaming.checkpointFileManagerClass": (
             "org.apache.spark.sql.execution.streaming.checkpointing."
             "FileSystemBasedCheckpointFileManager"
         ),
     }
-    local = master == "local" or master.startswith("local[")
-    jar = _fork_free_fs_jar() if local else None
-    if jar is not None:
-        conf[_CLASSPATH] = jar
-        conf["spark.hadoop.fs.file.impl"] = _FORK_FREE_FS
-    return conf
 
 
 def _fork_free_fs_jar() -> str | None:
