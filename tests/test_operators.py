@@ -3,6 +3,8 @@ VERDICT called out: unwrap rewrite-vs-drop asymmetry, delete-wins-latest
 changelog apply, as-of equal-ts ties, interval-join bucketing parity,
 and the keyed-upsert sink's tombstone propagation."""
 
+import datetime
+import decimal
 import os
 
 import pyspark.sql.functions as F
@@ -376,6 +378,136 @@ def test_vacuum_keeps_reader_visible_version(spark, tmp_path, monkeypatch):
     # in-flight reader on v=1 still works after vacuum
     assert reader.count() == 4
     assert upsert.read_state(spark, state).count() == 5
+
+
+def _jobs_in_group(spark, group, action):
+    """Run ``action()`` under a fresh job group; return (its result, the
+    ids of the jobs it launched)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _part_bytes(vdir):
+    return sum(os.path.getsize(os.path.join(vdir, n)) for n in os.listdir(vdir) if n.startswith("part-"))
+
+
+def _shipped_like(spark, n):
+    """``n`` rows shaped like the flagship's shipped_orders table."""
+    return spark.range(n).select(
+        F.format_string("o%07d", "id").alias("order_id"),
+        F.format_string("s%07d", "id").alias("shipment_id"),
+        F.format_string("c%05d", F.col("id") % 997).alias("customer_id"),
+        (F.col("id") * 0.25).alias("price"),
+        F.col("id").alias("_offset"),
+    )
+
+
+def test_small_state_lookup_runs_no_job(spark, tmp_path, monkeypatch):
+    """A point lookup on a small committed state table is served from the
+    driver: filter + collect runs no Spark job and returns what a parquet
+    scan of the same version returns.  A state above ``_LOCAL_BYTES``, a
+    ``below=`` read of an older version and a read without the commit's
+    memo entry are parquet scans with the same rows."""
+    from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming import (
+        upsert,
+    )
+
+    state = str(tmp_path / "small")
+    upsert.write_version(_shipped_like(spark, 800).coalesce(1), state)
+    vdir = os.path.join(state, "v=0")
+    schema = spark.read.parquet(vdir).schema
+    key = F.col("order_id") == "o0000421"
+    got, jobs = _jobs_in_group(
+        spark, "small-state-lookup", lambda: read_state(spark, state).filter(key).collect()
+    )
+    assert jobs == []
+    assert 0 < _part_bytes(vdir) <= upsert._LOCAL_BYTES
+    want, scan_jobs = _jobs_in_group(
+        spark, "small-state-scan", lambda: spark.read.schema(schema).parquet(vdir).filter(key).collect()
+    )
+    assert scan_jobs  # the job group does catch a scan's job
+    assert len(got) == 1 and got == want
+    assert read_state(spark, state).inputFiles() == []
+
+    # v=1 (600 rows) is the pointer's; below=1 reads v=0, which the memo
+    # no longer holds
+    upsert.write_version(_shipped_like(spark, 600).coalesce(1), state)
+    older = read_state(spark, state, below=1)
+    assert older.inputFiles()
+    assert sorted(older.collect()) == sorted(spark.read.schema(schema).parquet(vdir).collect())
+    assert read_state(spark, state).inputFiles() == []
+    monkeypatch.setattr(upsert, "_SCHEMA_MEMO", {})
+    fresh = read_state(spark, state)
+    assert fresh.inputFiles()
+    assert sorted(fresh.collect()) == sorted(_shipped_like(spark, 600).collect())
+
+    big = str(tmp_path / "big")
+    upsert.write_version(_shipped_like(spark, 30000).coalesce(1), big)
+    assert _part_bytes(os.path.join(big, "v=0")) > upsert._LOCAL_BYTES
+    scanned = read_state(spark, big)
+    assert scanned.inputFiles()
+    assert scanned.filter(F.col("order_id") == "o0029999").collect()[0]["_offset"] == 29999
+
+
+_NESTED = "struct<n:int,s:string,a:array<date>,m:map<string,double>>"
+
+
+@pytest.mark.parametrize(
+    "type_ddl, value",
+    [
+        ("bigint", 2**62 + 1),
+        ("int", -(2**31)),
+        ("smallint", -7),
+        ("tinyint", 127),
+        ("double", 1.0000000000000002),
+        ("float", 1.25),
+        ("string", "é\u0000x"),
+        ("boolean", True),
+        ("date", datetime.date(1, 1, 1)),
+        ("timestamp", datetime.datetime(1960, 1, 1, 0, 0, 0, 123456)),
+        ("timestamp_ntz", datetime.datetime(2262, 4, 11, 23, 47, 16, 854775)),
+        ("decimal(38,18)", decimal.Decimal("12345678901234567890.123456789012345678")),
+        ("decimal(9,2)", decimal.Decimal("-1234567.89")),
+        ("binary", bytearray(b"\x00\xff")),
+        ("array<double>", [1.5, None, -0.0]),
+        ("map<string,bigint>", {"a": 1, "b": None}),
+        (_NESTED, (None, "x", [datetime.date(2024, 2, 29), None], {"k": None})),
+    ],
+)
+def test_local_state_round_trips_types_exactly(spark, tmp_path, type_ddl, value):
+    """Every type the driver-local read path accepts comes back from
+    ``read_state`` with the parquet scan's schema and rows, nulls
+    included, under a non-UTC session time zone; a type it cannot
+    return exactly (``timestamp``, written as INT96) is read by the
+    scan."""
+    from pyspark.sql.types import StructType
+
+    from trainee_scala_module_8_kafka_streaming_etl_pipeline_spark.streaming import (
+        upsert,
+    )
+
+    schema = StructType.fromDDL(f"id bigint not null, v {type_ddl}")
+    state = str(tmp_path / "state")
+    upsert.write_version(spark.createDataFrame([(1, value), (2, None)], schema), state)
+    vdir = os.path.join(state, "v=0")
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        got = read_state(spark, state)
+        scan = spark.read.schema(schema).parquet(vdir)
+        assert got.schema == scan.schema
+        assert sorted(got.collect()) == sorted(scan.collect())
+        assert sorted(got.collect())[0]["v"] == value
+        local = got.inputFiles() == []
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+    assert local == (type_ddl != "timestamp")
 
 
 def test_decode_media_decoder_injection(spark):

@@ -171,18 +171,6 @@ def exact_dup_groups(
     )
 
 
-def minhash_signatures(sh: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """32 minhash values per doc: one groupBy with 32 partial-min aggs
-    (map-side combine collapses each task to one row per doc before the
-    exchange — no sort, no window)."""
-    aggs = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(MINHASH_P)).alias(f"mh{i}")
-        for i, (a, b) in enumerate(AB)
-    ]
-    aggs.append(F.count(F.lit(1)).alias("n_shingles"))  # occurrences, not distinct
-    return sh.groupBy(id_col).agg(*aggs)
-
-
 def minhash_perdoc(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:

@@ -210,22 +210,6 @@ def lsh_planes(
     return tables
 
 
-def _bucket_col(vec_col: str, planes: list[list[float]]) -> F.Column:
-    """Bucket id: one sign bit per hyperplane, packed into an int.
-    (JVM higher-order-function form; the hot path uses the vectorized
-    numpy variant in :func:`_bucketize_pandas` — same signs.)"""
-    acc = F.lit(0)
-    for j, plane in enumerate(planes):
-        arr = F.array(*[F.lit(v) for v in plane])
-        dot = F.aggregate(
-            F.zip_with(F.col(vec_col), arr, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda a, v: a + v,
-        )
-        acc = acc + F.when(dot > 0, F.lit(1 << j)).otherwise(F.lit(0))
-    return acc
-
-
 def _bucketize_pandas(
     emb: DataFrame, tables: list[list[list[float]]], id_col: str, vec_col: str
 ) -> DataFrame:

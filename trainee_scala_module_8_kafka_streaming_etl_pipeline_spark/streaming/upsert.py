@@ -41,6 +41,12 @@ two version policies, picked by the merge's algebra:
 Each commit keeps the newest ``_RETAIN`` = 2 versions: the pointer's,
 and the one before it that a re-delivered batch-id commit reads.
 
+Reads: parquet is the only durable copy, but a version this process
+committed, whose part files total at most ``_LOCAL_BYTES`` and whose
+types round-trip exactly through Arrow, comes back as a driver-local
+``LocalRelation`` built from those files, so a point lookup (filter +
+collect) runs no Spark job; every other version is a parquet scan.
+
 At scale the same surface is one ``MERGE INTO`` on a Delta/Iceberg table
 (WHEN MATCHED AND __deleted THEN DELETE); the versioned-parquet
 implementation keeps the semantics dependency-free.  State writes are
@@ -54,26 +60,82 @@ import os
 import threading
 from collections.abc import Callable, Sequence
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators.compaction import latest_by_offset
 
 _POINTER = "_LATEST"
 _RETAIN = 2
 
-# (version-dir path -> StructType) recorded by write_version at commit
-# time: read_state then declares the schema instead of re-running parquet
-# footer inference (~60 ms of driver latency per read — every micro-batch
-# merge reads 1-2 state tables, round 11).  Keyed by the version dir
-# (rewritten in place only by a re-delivered batch-id commit, which
-# re-records it; vacuumed dirs simply age out of use), with inference as
-# the fallback for readers in a fresh process (crash replay, external
-# readers).  The sinks of one pipeline commit
+# (version-dir path -> (StructType, local part bytes)) recorded by
+# write_version at commit time: read_state then declares the schema
+# instead of re-running parquet footer inference (~60 ms of driver
+# latency per read — every micro-batch merge reads 1-2 state tables,
+# round 11), and knows without a listing whether the version is small
+# enough to serve from the driver.  The bytes are None for a schema with
+# a type outside _EXACT_TYPES.  Keyed by the version dir (rewritten in
+# place only by a re-delivered batch-id commit, which re-records both;
+# vacuumed dirs simply age out of use), with a plain parquet scan as the
+# fallback for readers in a fresh process (crash replay, external
+# readers) and for older versions.  The sinks of one pipeline commit
 # from concurrent foreachBatch threads, so the prune-and-insert holds a
 # lock (a lone ``get`` is atomic).
-_SCHEMA_MEMO: dict[str, object] = {}
+_SCHEMA_MEMO: dict[str, tuple[T.StructType, int | None]] = {}
 _SCHEMA_MEMO_LOCK = threading.Lock()
+
+# Largest committed version (total parquet part-file bytes) read_state
+# serves as a driver-local LocalRelation instead of a parquet scan.  A
+# filter + collect on a LocalRelation is folded by the optimizer and
+# runs no job, but building it (pyarrow read + createDataFrame) grows
+# with the table while the scan's job floor does not.  Point lookups
+# through read_state in batch mode, one part file of 9-column
+# shipped_orders-shaped rows, a new key each time, 4 cores, median ms,
+# scan vs local: 26 KB 90 vs 30, 82 KB 77 vs 33, 238 KB 68 vs 50,
+# 676 KB 67 vs 88, 2.2 MB 68 vs 282 — the crossover is near 400 KB.
+# 256 KiB keeps the local path clearly ahead below the bound:
+# shipped_orders (~800 rows) is served locally, cdc_bigstate's 100k-key
+# state (~2.2 MB) keeps the scan.
+_LOCAL_BYTES = 256 * 1024
+
+# Spark types that round-trip exactly through parquet -> pyarrow ->
+# createDataFrame, alone and nested in arrays, maps and structs (a
+# parametrized round-trip test in tests/test_operators.py).  Not
+# TimestampType: Spark writes it as INT96, which pyarrow reads as a
+# naive instant that createDataFrame then shifts by the session time
+# zone.  A schema with any other type is read by the parquet scan.
+_EXACT_TYPES = (
+    T.BooleanType(), T.ByteType(), T.ShortType(), T.IntegerType(),
+    T.LongType(), T.FloatType(), T.DoubleType(), T.StringType(),
+    T.BinaryType(), T.DateType(), T.TimestampNTZType(),
+)
+
+
+def _exact(dt) -> bool:
+    """Whether every type in ``dt`` is one of ``_EXACT_TYPES`` or a decimal."""
+    if isinstance(dt, T.StructType):
+        return all(_exact(f.dataType) for f in dt.fields)
+    if isinstance(dt, T.ArrayType):
+        return _exact(dt.elementType)
+    if isinstance(dt, T.MapType):
+        return _exact(dt.keyType) and _exact(dt.valueType)
+    return isinstance(dt, T.DecimalType) or dt in _EXACT_TYPES
+
+
+def _as_nullable(dt):
+    """``dt`` with every field, element and map value nullable: the schema
+    a parquet scan reports, so both read paths return the same one."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
 
 
 def _state_version(state_dir: str) -> int | None:
@@ -105,7 +167,16 @@ def read_state(
     instead of the pointer's: the prior of a batch-id commit, so a
     re-delivered batch never folds in its own earlier commit (or an
     orphan dir a crash left at its id).  Without it the read is one
-    pointer-file read, with no directory listing."""
+    pointer-file read plus a memo lookup, with no directory listing.
+
+    A version ``write_version`` committed in this process (the newest of
+    its state dir), with part files of at most ``_LOCAL_BYTES`` and only
+    ``_EXACT_TYPES``, comes back as a fresh driver-local
+    ``LocalRelation`` read from those files: a filter + collect on it runs
+    no Spark job, and below the bound that saves more than the read
+    costs (see ``_LOCAL_BYTES``).  Any other version — larger, another
+    type, an older one, or one from another process — is a parquet
+    scan."""
     if below is None:
         v = _state_version(state_dir)
     else:
@@ -113,10 +184,15 @@ def read_state(
     if v is None:
         return None
     path = os.path.join(state_dir, f"v={v}")
-    schema = _SCHEMA_MEMO.get(path)
-    if schema is not None:
-        return spark.read.schema(schema).parquet(path)
-    return spark.read.parquet(path)
+    memo = _SCHEMA_MEMO.get(path)
+    if memo is None:
+        return spark.read.parquet(path)
+    schema, local_bytes = memo
+    # 0 bytes: no part files, which pyarrow would read as a table
+    # without columns; the scan reads it as an empty one
+    if local_bytes and local_bytes <= _LOCAL_BYTES:
+        return spark.createDataFrame(pq.read_table(path), schema=schema)
+    return spark.read.schema(schema).parquet(path)
 
 
 def upsert_batch(
@@ -215,14 +291,21 @@ def write_version(df: DataFrame, state_dir: str, version: int | None = None) -> 
     os.makedirs(state_dir, exist_ok=True)
     vdir = os.path.join(state_dir, f"v={version}")
     df.write.mode("overwrite").parquet(vdir)
-    # keep only the newest version's schema per state dir — a long-lived
+    # keep only the newest version's entry per state dir — a long-lived
     # sink must not grow the memo by one entry per batch
     prefix = os.path.join(state_dir, "v=")
-    schema = df.schema
+    schema = _as_nullable(df.schema)
+    local_bytes = None
+    if _exact(schema):
+        local_bytes = sum(
+            os.path.getsize(os.path.join(vdir, n))
+            for n in os.listdir(vdir)
+            if n.startswith("part-")
+        )
     with _SCHEMA_MEMO_LOCK:
         for k in [k for k in _SCHEMA_MEMO if k.startswith(prefix)]:
             del _SCHEMA_MEMO[k]
-        _SCHEMA_MEMO[vdir] = schema
+        _SCHEMA_MEMO[vdir] = (schema, local_bytes)
     tmp = os.path.join(state_dir, f"{_POINTER}.tmp")
     with open(tmp, "w") as fh:
         fh.write(str(version))
